@@ -211,13 +211,6 @@ def period_bucket(col: Column | str, period: str) -> Column:
     raise ValueError(f"unknown period: {period!r}")
 
 
-def date_spine_col(start: Column, end: Column, step: str = "interval 1 day") -> Column:
-    """G3 helper — array of dates/timestamps from start to end inclusive;
-    explode for a spine (reference pd.date_range,
-    app_indicadores_modelo_atencion.py:963-968)."""
-    return F.sequence(start, end, F.expr(step))
-
-
 def ampm_to_decimal_hours(col: Column | str, sentinel: float = 999999.0) -> Column:
     """F11 — ``hora_a_decimal`` (app_confirmaciones.py:226-257) as one
     expression, branch-for-branch:

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+from ..session import spread_small_input as _spread
 from .text_analysis import tokens
 
 HASH_HEX_CHARS = 15  # 60-bit positive ints in both engines
@@ -80,54 +82,6 @@ def exact_dedup(
 # odd multipliers/offsets; the oracle SQL embeds the same numbers.
 MINHASH_P = (1 << 31) - 1
 
-# Persist-lifecycle cap: registry queries hand lazy frames to a driver that
-# collects them and moves on, so an operator-internal persist can never be
-# unpersisted by its own caller at the right moment. Instead each new
-# pipeline invocation evicts the previous invocation's cached frame(s) —
-# bounding a long session (100-query correctness run, bench loops, pytest)
-# to at most ONE live cached shingle frame (TWO for incremental_dedup,
-# which needs both sides alive at once — see _persist_capped_tagged)
-# instead of one per invocation.
-_LIVE_PERSISTS: list = []
-_LIVE_TAGGED: dict = {}
-
-
-def _unpersist_quiet(frame) -> None:
-    try:
-        frame.unpersist()
-    except Exception:
-        pass  # session of the old frame may already be stopped
-
-
-def _persist_capped(df: DataFrame) -> DataFrame:
-    while _LIVE_PERSISTS:
-        _unpersist_quiet(_LIVE_PERSISTS.pop())
-    # a fresh (non-incremental) dedup invocation also retires any tagged
-    # frames a previous incremental_dedup left alive, so a long mixed run
-    # never holds more than this invocation's caches
-    for tag in list(_LIVE_TAGGED):
-        _unpersist_quiet(_LIVE_TAGGED.pop(tag))
-    _LIVE_PERSISTS.append(df.persist())
-    return df
-
-
-def _persist_capped_tagged(df: DataFrame, tag: str) -> DataFrame:
-    """Tagged persist slot: one live frame per tag, evicted when the SAME
-    tag re-registers (incremental_dedup needs its two shingle frames to
-    coexist, so cross-tag eviction must not happen here); the untagged
-    single slot is retired because a new invocation has begun."""
-    while _LIVE_PERSISTS:
-        _unpersist_quiet(_LIVE_PERSISTS.pop())
-    old = _LIVE_TAGGED.pop(tag, None)
-    if old is not None:
-        _unpersist_quiet(old)
-    _LIVE_TAGGED[tag] = df.persist()
-    return df
-
-
-from ..session import multi_consumer_barrier  # noqa: E402
-from ..session import spread_small_input as _spread  # noqa: E402
-# (shared parallelism guard: see session.spread_small_input)
 
 
 def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
@@ -233,15 +187,14 @@ def minhash_lsh_pairs(
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band → bucket
     self-join → exact-Jaccard verify ≥ threshold.
     Returns (id_a, id_b, jaccard_sim), id_a < id_b, one row per pair."""
-    sh = _persist_capped(
+    sh = materialize(
         # the shingle frame feeds signing AND both sides of the verify join —
-        # persist so tokenize+shingle runs once, not three times (capped:
-        # the previous invocation's frame is evicted, see _persist_capped).
-        # The empty-shingle filter goes ABOVE the persist: a filter on the
+        # materialise it so tokenize+shingle runs once, not three times.
+        # The empty-shingle filter goes ABOVE the barrier: a filter on the
         # projection itself gets predicate-pushed below the _spread
         # exchange, re-evaluating the whole shingle expression
         # single-threaded in the scan task (measured 2.5 s of q47's 6 s at
-        # sf0.1); the cache boundary pins it to the cheap cached array.
+        # sf0.1); the barrier pins it to the cheap materialised array.
         _spread(df).select(
             F.col(id_col).alias("_id"), shingles(F.col(text_col), k).alias("_sh")
         )
@@ -315,7 +268,7 @@ def minhash_lsh_pairs_collapsed(
     # ReuseExchange cannot dedup them and the corpus digest groupBy ran
     # three times (r13: 9 parquet scans in q67's plan, 0 reuse). One
     # lazy checkpoint = one scan + one digest shuffle.
-    reps = multi_consumer_barrier(
+    reps = materialize(
         df.groupBy(F.md5(norm).alias("_digest")).agg(
             F.min(id_col).alias(id_col),
             # representative's raw text (min-id row) — deterministic, and
@@ -361,7 +314,7 @@ def dedup_clusters(
     Iterative min-label propagation: each node starts labeled with its own
     id; every round takes min(label, neighbors' labels) until a fixpoint
     (min reachable id — O(component diameter) rounds; near-dup components
-    are dense, so diameter is small). Per-round ``localCheckpoint``
+    are dense, so diameter is small). Per-round ``session.materialize``
     truncates lineage so plans stay flat. At 100 TB the same loop holds —
     only (node, label) pairs for nodes *in the pair graph* shuffle each
     round (typically ≪ corpus size); the 2-hop large-star/small-star
@@ -369,24 +322,23 @@ def dedup_clusters(
     """
     # pairs feeds BOTH arms of the edges union — un-checkpointed, the
     # whole candidate+verify join chain ran twice inside the eager edges
-    # materialization (r13; the shingle persist only covers the leaves).
+    # materialization (r13; the shingle barrier only covers the leaves).
     # The pair set is tiny (near-dup pairs), so the lazy barrier costs
-    # nothing and halves the LSH verify work (cluster-safety switch:
-    # session.multi_consumer_barrier).
-    pairs = multi_consumer_barrier(minhash_lsh_pairs(
+    # nothing and halves the LSH verify work.
+    pairs = materialize(minhash_lsh_pairs(
         df, text_col, id_col, k=k, num_hashes=num_hashes, bands=bands,
         threshold=threshold,
     ))
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
     lab = (
         edges.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
     # labels are monotone non-increasing per node, so the scalar label sum
     # strictly decreases iff any label changed — one cheap aggregate over
@@ -407,7 +359,7 @@ def dedup_clusters(
                     F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")
                 ).alias("cluster_id"),
             )
-            .localCheckpoint()
+            .transform(materialize, eager=True)
         )
         new_sum = new_lab.agg(_dsum).collect()[0][0]
         lab = new_lab
@@ -443,7 +395,7 @@ def cc_bigstar(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     node id — no per-component serialization anywhere, so a single huge
     component spreads across the cluster (the property propagation also
     has, but in diameter-many rounds). Lineage is truncated per round
-    with ``localCheckpoint``; at the fixpoint the edge set is a star per
+    by ``session.materialize``; at the fixpoint the edge set is a star per
     component (every node points at the component min), read off
     directly as labels.
     """
@@ -455,7 +407,7 @@ def cc_bigstar(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -486,7 +438,7 @@ def cc_bigstar(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         )
 
     for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint()
+        e = materialize(small_star(large_star(e)), eager=True)
         # stars are exactly the fixpoints of both ops (shown below), and
         # labels are only readable off a star set — so the convergence
         # check IS the star test: no node may be both a center (u) and a
@@ -640,12 +592,12 @@ def decontaminate(
             F.explode(shingles(F.col(text_col), k)).alias("g"),
         )
 
-    # one tagged exploded frame, persisted (capped lifecycle): tokenize +
-    # shingle runs once, and the df-cap aggregate plus both join sides all
-    # read the cached rows instead of re-exploding
+    # one tagged exploded frame, materialised: tokenize + shingle runs
+    # once, and the df-cap aggregate plus both join sides all read the
+    # materialised rows instead of re-exploding
     # _spread BEFORE side(): the exchange must precede the shingle
     # explode, or the expensive expression still runs in the scan task
-    e = _persist_capped(side(_spread(train), "t").union(side(_spread(bench), "b")))
+    e = materialize(side(_spread(train), "t").union(side(_spread(bench), "b")))
     if isinstance(max_df, float):
         import math
 
@@ -887,7 +839,7 @@ def decontaminate_bloom(
             .select("g")
         )
         b = b.join(keep, "g")
-    b = _persist_capped(b)
+    b = materialize(b)
     t = _spread(train).select(
         F.col(id_col).alias("doc_id"),
         F.explode(shingles(F.col(text_col), k)).alias("g"),
@@ -895,8 +847,13 @@ def decontaminate_bloom(
     if prefilter:
         bits = bloom_bitmap_bits(b.select("g").distinct(), "g", m_bits, n_hashes)
         t = t.filter(bloom_probe_filter(F.col("g"), bits, m_bits, n_hashes))
+    # make b the build side explicitly: the materialised b carries the
+    # planner's join-size estimate (a product of its inputs), not its
+    # real size, so without the hint the planner could broadcast the
+    # corpus-scale train side. A shuffled hash build, not a broadcast:
+    # b grows with the bench set, which need not fit on one node.
     pair = (
-        t.join(b, "g")
+        t.join(b.hint("shuffle_hash"), "g")
         .groupBy("doc_id", "b_id")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -1139,15 +1096,15 @@ def incremental_dedup(
         .select("new_id", "match_id")
     )
 
-    def prepared(df: DataFrame, side: str) -> DataFrame:
+    def prepared(df: DataFrame) -> DataFrame:
         sh = _spread(df).select(
             F.col(id_col).alias("_id"),
             shingles(F.col(text_col), k).alias("_sh"),
         )
-        return _persist_capped_tagged(sh, side).filter(F.size("_sh") > 0)
+        return materialize(sh).filter(F.size("_sh") > 0)
 
-    sh_new = prepared(new_batch, "inc_new")
-    sh_cor = prepared(corpus, "inc_cor")
+    sh_new = prepared(new_batch)
+    sh_cor = prepared(corpus)
 
     def banded(sh: DataFrame) -> DataFrame:
         signed = sh.withColumn("_base", base_hashes("_sh")).select(
@@ -1293,16 +1250,16 @@ def pagerank_rounds(
 
     Scale shape per round: one shuffle on src for the contribution join
     (out-degree table is dim-sized relative to edges), one partial-agg
-    shuffle on dst; the (tiny) rank frame is localCheckpoint-truncated
-    each round so the plan stays flat (the CC-loop rationale). The only
-    driver-side scalar is the 1-row node count (pass ``n_nodes`` to
-    avoid even that when the caller knows it).
+    shuffle on dst; the (tiny) rank frame is lineage-truncated by
+    ``session.materialize`` each round so the plan stays flat (the
+    CC-loop rationale). The only driver-side scalar is the 1-row node
+    count (pass ``n_nodes`` to avoid even that when the caller knows it).
     """
     # edges is referenced ~2 + 2*rounds times (node set, degrees, every
     # round's contribution join) — materialize it ONCE; without the
     # barrier a lazy upstream (e.g. the full MinHash-LSH pipeline in
     # q134) re-executes per reference (measured 14.5 s -> ~4 s at sf0.1)
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, eager=True)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -1312,7 +1269,7 @@ def pagerank_rounds(
     if n == 0:  # empty graph: empty (node, rank) frame, same schema
         return nodes.withColumn("rank", F.lit(0.0))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = materialize(nodes)
     rank = nodes.withColumn("rank", F.lit(1.0 / n))
     teleport = (1.0 - damping) / n
     for _ in range(rounds):
@@ -1344,7 +1301,7 @@ def pagerank_rounds(
                     + F.lit(damping) * F.coalesce(F.col("_s"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
     return rank
 
@@ -1405,9 +1362,8 @@ def duplicated_gram_stats(
     )
     # gd feeds BOTH the totals aggregation and the join probe side; left
     # lazy it would re-run the whole tokenize+explode+aggregate pipeline
-    # twice (the q132/q150 lazy-frame lesson). One persisted copy, managed
-    # by the module's capped-persist lifecycle.
-    gd = _persist_capped(
+    # twice (the q132/q150 lazy-frame lesson). One materialised copy.
+    gd = materialize(
         g.filter(F.col("gram").isNotNull())
         .groupBy("gram", "doc_id")
         .agg(F.count("*").alias("m"))
@@ -1500,18 +1456,15 @@ def remove_duplicated_grams(
         F.col(id_col).alias("doc_id"),
         F.posexplode(ngrams_all(F.col(text_col), k)).alias("pos", "gram"),
     )
-    # gd is deliberately NOT persisted (r13, measured; re-measured at
-    # sf1 in r14): the untagged single-slot lifecycle meant the covered
-    # persist below always evicted this one before materialization, so
-    # the operator has always recomputed gd for its two consumers — and
-    # making both frames coexist via tagged slots measured SLOWER at
+    # gd is deliberately NOT materialised (r13, measured; re-measured
+    # at sf1 in r14): keeping it alongside covered measured SLOWER at
     # sf0.1 (4.20 -> 5.26 min-of-3 interleaved A/B) AND at sf1
     # (8.08 -> 9.43 min-of-2, plans/r14/probe_q138_q157.py): across two
     # scale tiers, materializing the gram-level aggregate costs more
-    # than recomputing it from the (cheap) scan. covered keeps the one
-    # persist slot — it is both smaller and re-derived through the
-    # expensive explode+distinct. The rejection is now pinned at both
-    # tiers; re-profile only if the corpus/dup profile changes.
+    # than recomputing it from the (cheap) scan for its two consumers.
+    # covered is materialised instead — it is both smaller and
+    # re-derived through the expensive explode+distinct. Re-profile only
+    # if the corpus/dup profile changes.
     gd = g.groupBy("gram", "doc_id").agg(F.count("*").alias("m"))
     dup_keys = (
         gd.groupBy("gram")
@@ -1529,7 +1482,7 @@ def remove_duplicated_grams(
         )
         .distinct()
     )
-    covered = _persist_capped(covered)
+    covered = materialize(covered)
     win = Window.partitionBy("doc_id").orderBy("wpos")
     spans = (
         covered.withColumn(
@@ -1736,7 +1689,7 @@ def ppjoin_pairs(
         shingles(F.col(text_col), k).alias("grams"),
     ).filter(F.size("grams") > 0)
     # multiply consumed (df build + rank-join pass)
-    g = g.localCheckpoint(eager=True)
+    g = materialize(g, eager=True)
     df_tab = (
         g.select(F.explode("grams").alias("gram"))
         .groupBy("gram")
@@ -1758,7 +1711,7 @@ def ppjoin_pairs(
             "as prefix",
         )
         # feeds pa, pb AND both verify sides (4 consumers)
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     pa = ranked.select(
         F.col("id").alias("id_a"), F.col("n").alias("na"),

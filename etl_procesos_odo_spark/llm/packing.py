@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .text_analysis import token_count_ws, tokens
 
 
@@ -295,7 +296,7 @@ def interleave_order(
         # cluster scale this is persist(MEMORY_AND_DISK) territory, in
         # a single JVM an eager checkpoint; either way cache bytes beat
         # three recomputes of the rank subtree.
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     # global sequence: same two-phase rank, striped monotonically in the
     # position key (pos_key in (0, 1) by construction)

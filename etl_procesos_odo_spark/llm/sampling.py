@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import multi_consumer_barrier
+from ..session import materialize
 from .dedup import hash60
 
 TWO_POW_60 = float(1 << 60)
@@ -122,9 +122,9 @@ def mix_rebalance(
     # base feeds the per-stratum totals AND the final rate-filtered join;
     # un-checkpointed, the caller's weight expression (typically a full
     # tokenize over the corpus, q109) ran twice. The frame is narrow by
-    # contract — (id, stratum, weight) — so the cache is cheap (r13;
-    # cluster-safety switch: session.multi_consumer_barrier).
-    base = multi_consumer_barrier(df.withColumn("_w", wcol.cast("long")))
+    # contract — (id, stratum, weight) — so the barrier is cheap (r13;
+    # form per master: session.materialize).
+    base = materialize(df.withColumn("_w", wcol.cast("long")))
     totals = base.groupBy(strata_col).agg(F.sum("_w").alias("_t"))
     tgt = df.sparkSession.createDataFrame(
         sorted(targets.items()), [strata_col, "_share"]
@@ -182,12 +182,10 @@ def leakage_safe_split(
         F.col(id_col), F.md5(F.col(text_col)).alias("dg")
     )
     # `d` feeds both the cluster aggregate and the assignment join;
-    # unpersisted, the full-text md5 scan runs twice (the partial agg
-    # below the exchange defeats ReuseExchange). ~40 bytes/row persisted
-    # vs re-hashing every document — the capped slot bounds memory.
-    from .dedup import _persist_capped
-
-    d = _persist_capped(d)
+    # unmaterialised, the full-text md5 scan runs twice (the partial agg
+    # below the exchange defeats ReuseExchange). ~40 bytes/row kept vs
+    # re-hashing every document.
+    d = materialize(d)
     c = d.groupBy("dg").agg(
         F.min(id_col).alias("cluster_id"),
         F.count(F.lit(1)).alias("n_members"),
@@ -298,7 +296,7 @@ def priority_sample(
         # branch, and (via samp) the estimator agg; unmaterialized, each
         # consumer re-runs the scan + both window sorts (measured 5
         # scans in the executed plan). Tiny by construction: checkpoint.
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     tau = top.groupBy(*group_cols).agg(
         F.expr(
@@ -370,7 +368,7 @@ def budget_waterfill(
     source counts beyond window comfort (~10^7), stripe the rank with
     the q50 partitioner — same expressions.
 
-    ``stats`` and the labeled frame ``s`` are localCheckpoint-ed (r13):
+    ``stats`` and the labeled frame ``s`` are materialised (r13):
     the waterfill fans its input out to the budget total, the ordered
     prefix windows, the saturated-mass aggregate, and the final
     projection — un-materialized, EVERY branch re-ran the caller's
@@ -378,10 +376,10 @@ def budget_waterfill(
     held 14 document scans / 53 exchanges; a downstream consumer like
     q183/q184 multiplies the fan-out again). Both frames are KB-sized
     (|sources| rows) — exactly the "cached bytes far below recompute
-    cost" side of the line_dedup_corpus persist rule. Barrier form and
-    its cluster-safety switch: see session.multi_consumer_barrier.
+    cost" side of the line_dedup_corpus persist rule. Barrier form per
+    master: see session.materialize.
     """
-    stats = multi_consumer_barrier(stats)
+    stats = materialize(stats)
     tot = stats.agg(
         F.sum(cap_col).alias("tc"), F.sum(weight_col).alias("tw")
     ).selectExpr(f"({budget_num} * tc) div {budget_den} as budget", "tw")
@@ -421,7 +419,7 @@ def budget_waterfill(
     )
     # s feeds the saturated-mass aggregate AND the final projection —
     # barrier so the double-window prefix chain runs once (KB-sized)
-    s = multi_consumer_barrier(s)
+    s = materialize(s)
     scal = s.agg(
         F.coalesce(
             F.sum(F.when(F.col("saturated"), F.col(cap_col))), F.lit(0)
@@ -458,13 +456,12 @@ def grouped_budget_waterfill(
     exact integer discipline; the ordered windows are PARTITIONED BY
     the group, so groups parallelize.
 
-    ``stats`` and ``s`` are localCheckpoint-ed like
+    ``stats`` and ``s`` are materialised like
     :func:`budget_waterfill` (r13): the input here is typically a join
     of the caller's corpus-scale groupBy with an OUTER waterfill (q183),
     so un-materialized fan-out re-ran both; frames are |groups×sources|
-    rows, KB-sized. Barrier form and its cluster-safety switch: see
-    session.multi_consumer_barrier."""
-    stats = multi_consumer_barrier(stats)
+    rows, KB-sized. Barrier form per master: see session.materialize."""
+    stats = materialize(stats)
     w_tot = Window.partitionBy(part_col)
     win = Window.partitionBy(part_col).orderBy("_r", key_col)
     s = (
@@ -499,7 +496,7 @@ def grouped_budget_waterfill(
             ),
         )
     )
-    s = multi_consumer_barrier(s)
+    s = materialize(s)
     scal = s.groupBy(part_col).agg(
         F.coalesce(
             F.sum(F.when(F.col("saturated"), F.col(cap_col))), F.lit(0)

@@ -21,6 +21,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..session import spread_small_input as _spread
 
 
@@ -437,7 +438,7 @@ def kmeans_lloyd_step(
     # table a production IVF build persists anyway (the semantic_dedup
     # note), and it replaces three argmax-window shuffles of the vector
     # payload with one.
-    a0 = nearest(v, cents, "cell_init").localCheckpoint(eager=False)
+    a0 = nearest(v, cents, "cell_init").transform(materialize)
     comp = a0.select(
         "cell_init", F.posexplode(F.col("_v")).alias("pos", "x")
     )
@@ -620,12 +621,13 @@ def semantic_dedup(
     # the assignment frame feeds BOTH pair sides and the final verdict
     # join; uncached, each branch re-runs the whole Lloyd chain (observed:
     # 18 embedding scans, 9 centroid broadcasts in the physical plan).
-    # Cache it once — capped lifecycle shared with the dedup ops. At
-    # 100 TB this materialization is the (id, cell, vec, norm) assignment
-    # table a production pipeline would persist to storage anyway.
-    from .dedup import _persist_capped
-
-    m = _persist_capped(m)
+    # Materialise it once. At 100 TB this is the (id, cell, vec, norm)
+    # assignment table a production pipeline would persist anyway. The
+    # checkpoint keeps the partition count AQE coalesced m's last stage
+    # to by bytes (ONE at sf0.1, ~0.5 MB), which ran the quadratic pair
+    # stage as one task (3.2 s vs 2.5 s warm): spread it back to the
+    # session's parallelism, a no-op once m spans the cluster.
+    m = _spread(materialize(m))
     a = m.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("va"),
         F.col("_nrm").alias("na"), "cell",
@@ -881,7 +883,7 @@ def kmeans_train(
     a = nearest(cents)
     init = a.select("_id", F.col("cell").alias("cell_init"))
     for _ in range(rounds):
-        cents = micro_means(a).localCheckpoint(eager=False)
+        cents = micro_means(a).transform(materialize)
         a = nearest(cents)
     return init.join(
         a.select("_id", "cell", F.col("_cs").alias("cos_final")), on="_id"
@@ -955,7 +957,7 @@ def kmeans_train_centroids(
 
     a = nearest(cents)
     for i in range(rounds):
-        cents = micro_means(a).localCheckpoint(eager=False)
+        cents = micro_means(a).transform(materialize)
         if i < rounds - 1:  # the last round's re-assignment feeds nothing
             a = nearest(cents)
     return cents
@@ -1034,7 +1036,7 @@ def hybrid_rrf_topk(
             F.col("doc_id"), shingles(F.col("text"), shingle_k).alias("sh")
         )
         .repartition(sc.defaultParallelism, F.col("doc_id"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
         .filter(F.size("sh") > 0)
     )
     qsh = sh.filter(F.col("doc_id") < n_queries).select(
@@ -1313,7 +1315,7 @@ def tfidf_cosine_pairs(
     """
     import math
 
-    from .dedup import _persist_capped_tagged, ngrams_all
+    from .dedup import ngrams_all
 
     n_docs = None
     if isinstance(max_df, float) or isinstance(candidate_budget, float):
@@ -1327,12 +1329,9 @@ def tfidf_cosine_pairs(
         F.explode(ngrams_all(F.col(text_col), k)).alias("term"),
     )
     # tf feeds the df histogram chain AND the weight build — uncached,
-    # both re-ran the tokenize+explode+groupBy from the scan (r13; the
-    # two tagged slots coexist like incremental_dedup's, retired on the
-    # next dedup/similarity invocation)
-    tf = _persist_capped_tagged(
-        g.groupBy("term", "_id").agg(F.count(F.lit(1)).alias("tfc")),
-        "tfidf_tf",
+    # both re-ran the tokenize+explode+groupBy from the scan (r13)
+    tf = materialize(
+        g.groupBy("term", "_id").agg(F.count(F.lit(1)).alias("tfc"))
     )
     dfh = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
     dfq = dfh.filter(F.col("dfc") <= max_df)
@@ -1368,7 +1367,7 @@ def tfidf_cosine_pairs(
             .drop("_capb")
         )
     nd = docs.agg(F.count(F.lit(1)).alias("nd"))
-    wt = _persist_capped_tagged(
+    wt = materialize(
         tf.join(dfq, on="term")
         .crossJoin(F.broadcast(nd))
         .select(
@@ -1378,8 +1377,7 @@ def tfidf_cosine_pairs(
                 f"CAST(round((tfc * (2 * nd - 2 * dfc + 1) * {scale}.0)"
                 " / (2 * dfc + 1)) AS BIGINT)"
             ).alias("wq"),
-        ),
-        "tfidf_wt",
+        )
     )
     nrm = wt.groupBy("_id").agg(
         F.sum(F.col("wq").cast("decimal(38,0)") * F.col("wq")).alias("nsq")

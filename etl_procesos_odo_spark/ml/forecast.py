@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.datetime_fns import week_of_month, weekday_monday0
+from ..session import materialize
 
 
 def demand_features(events: DataFrame) -> DataFrame:
@@ -65,12 +66,11 @@ def train_best_forecaster(features: DataFrame, seed: int = 42):
     # schedules a full-width job over near-empty partitions. Repartition
     # to ONE partition AFTER the parallel aggregation (repartition, not
     # coalesce: coalesce would collapse the upstream agg to one task too)
-    # and cache: iteration jobs become single-task over in-memory rows.
-    data = (
+    # and materialise: iteration jobs become single-task over kept rows.
+    data = materialize(
         assembler.transform(features)
         .select("features", "demanda")
         .repartition(1)
-        .cache()
     )
     train, test = data.randomSplit([0.7, 0.3], seed=seed)
     evaluator = RegressionEvaluator(
@@ -87,12 +87,12 @@ def train_best_forecaster(features: DataFrame, seed: int = 42):
     # threads (the CrossValidator(parallelism=N) pattern): wall time drops
     # from the sum of the fits to the slowest one, and on a real cluster
     # the small single-model jobs interleave instead of idling executors.
-    # Results are unchanged: each fit is seeded and reads the same cached
-    # split frames.
+    # Results are unchanged: each fit is seeded and reads the same
+    # materialised split frames.
     from concurrent.futures import ThreadPoolExecutor
 
-    train = train.cache()
-    test = test.cache()
+    train = materialize(train)
+    test = materialize(test)
 
     def fit_score(item):
         name, est = item
@@ -108,8 +108,6 @@ def train_best_forecaster(features: DataFrame, seed: int = 42):
         metrics[name] = r2
         if r2 > best_r2:
             best_name, best_model, best_r2 = name, model, r2
-    for frame in (train, test, data):
-        frame.unpersist()
     return best_model, {"best": best_name, "r2": metrics}
 
 

@@ -7,7 +7,7 @@ from .aggregates import (
 )
 from .joins import recommend_salting, salted_join, spine_left_join_fill
 from .partitioner import balanced_partition, check_partition, constrained_partition
-from .spines import date_spine, hour_spine, time_slot_spine
+from .spines import hour_spine, time_slot_spine
 from .windows import cumulative_sum, dedup_first, lag_wait_minutes, top_n
 
 __all__ = [
@@ -16,7 +16,6 @@ __all__ = [
     "check_partition",
     "constrained_partition",
     "cumulative_sum",
-    "date_spine",
     "dedup_first",
     "hour_spine",
     "lag_wait_minutes",

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 _PAIR_EXPR = (
     "flatten(transform({col}, (x, i) -> "
     "transform(slice({col}, i + 2, size({col})), y -> struct(x, y))))"
@@ -66,7 +68,7 @@ def basketize(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     return (
         df.groupBy(F.col(basket_col).alias("o"))
         .agg(F.sort_array(F.collect_set(item_col)).alias("it"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
 
 
@@ -123,7 +125,7 @@ def frequent_itemsets(
         .crossJoin(F.broadcast(ms))
         .filter("support >= ms")
         .selectExpr("p.x as x", "p.y as y", "support")
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     # A-priori candidate generation over the tiny L2 set; explicit
     # broadcasts — l2 is stats-less behind the checkpoint
@@ -192,7 +194,7 @@ def association_rules(
         # s2 feeds BOTH directions of the dir2 union — un-checkpointed,
         # the basket pair-enumeration groupBy (the expensive stage) ran
         # twice (r13). Frequent-pair table is <= |items|^2 rows — tiny.
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     dir2 = s2.selectExpr("x as ante", "y as cons", "sup").unionByName(
         s2.selectExpr("y as ante", "x as cons", "sup")
@@ -234,7 +236,7 @@ def sequential_pattern_support(
     tmm = (
         ev.groupBy("u", "t")
         .agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     # entity count from the checkpointed (u, t) min/max table, NOT the
     # raw event stream: distinct u over tmm == distinct u over ev by

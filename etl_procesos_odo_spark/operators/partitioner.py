@@ -184,18 +184,6 @@ def constrained_partition(
     )
 
 
-def attach_partition(
-    df: DataFrame, assignment: DataFrame, unit_col: str, key_col: str
-) -> DataFrame:
-    """X4 application step — semi-join-style attach of the partition id back
-    onto the full fact rows (reference membership filter, app.py:160-166).
-
-    The assignment frame has one row per distinct (unit, key) — usually far
-    smaller than the fact; broadcast when bounded.
-    """
-    return df.join(assignment, on=[unit_col, key_col], how="inner")
-
-
 def check_partition(
     assignment: DataFrame, unit_col: str, key_col: str, part_col: str = "particion"
 ) -> dict:

@@ -1,4 +1,4 @@
-"""Spine (dimension) generators — SURVEY.md §2.7 G1–G3.
+"""Spine (dimension) generators — SURVEY.md §2.7 G1–G2.
 
 Spines are tiny by construction (24 rows, ≤ a few thousand dates/slots), so
 every spine join downstream is a broadcast join: no shuffle of the fact side
@@ -7,7 +7,7 @@ regardless of data scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -19,20 +19,6 @@ def hour_spine(spark: SparkSession) -> DataFrame:
     """G2 — hours 0–23 (reference pd.DataFrame({'Hora': range(24)}),
     app_calculo_necesidad_recepción_call_center.py:436)."""
     return spark.range(24).select(F.col("id").alias("hora"))
-
-
-def date_spine(spark: SparkSession, start, end) -> DataFrame:
-    """G3 — one row per calendar day in [start, end] inclusive (reference
-    pd.date_range, app_indicadores_modelo_atencion.py:963-968).
-
-    ``start``/``end`` are date strings or Columns; generated via
-    sequence+explode on a one-row frame — never a table scan.
-    """
-    start_c = start if isinstance(start, Column) else F.lit(start).cast("date")
-    end_c = end if isinstance(end, Column) else F.lit(end).cast("date")
-    return _one_row(spark).select(
-        F.explode(F.sequence(start_c, end_c, F.expr("interval 1 day"))).alias("fecha")
-    )
 
 
 def time_slot_spine(

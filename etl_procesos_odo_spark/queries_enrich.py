@@ -19,6 +19,7 @@ from .llm.sampling import hash_uniform
 from .llm.similarity import kmeans_lloyd_step
 from .queries_llm import O_TOKENS, o_dot, o_h60
 from .registry import load_table, register
+from .session import materialize
 
 # ---------------------------------------------------------------------------
 # q82 — block-level (substring) dedup
@@ -1602,7 +1603,7 @@ def q132_event_transitions(spark: SparkSession, sf_dir: str):
     # materialize the (|types|^2-row) count table once: t and the join
     # both read it, and without the barrier the whole LAG pipeline
     # re-executes per reference (plan showed 5 exchanges; 2 after)
-    c = c.localCheckpoint(eager=False)
+    c = materialize(c)
     t = c.groupBy("prev_type").agg(F.sum("n").alias("tot"))
     return c.join(F.broadcast(t), on="prev_type").select(
         "prev_type", "next_type", "n",
@@ -1993,7 +1994,7 @@ def q143_chi_square_source_lang(spark: SparkSession, sf_dir: str):
     c = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("obs")
     )
-    c = c.localCheckpoint(eager=False)
+    c = materialize(c)
     rt = c.groupBy("source").agg(F.sum("obs").alias("r"))
     ct = c.groupBy("lang").agg(F.sum("obs").alias("k"))
     tot = c.agg(F.sum("obs").alias("total"))
@@ -2282,7 +2283,7 @@ def q150_rolling_wau(spark: SparkSession, sf_dir: str):
     # distinct re-execute per reference; plan showed 5 exchanges)
     ud = ev.select(
         "user_id", F.col("ts").cast("date").alias("day")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(materialize)
     # fan out: each (user, day) row contributes to windows day..day+6 —
     # the explode form (scales with deduped rows; no days-table join)
     contrib = ud.select(
@@ -2521,7 +2522,7 @@ def q172_incremental_rollup(spark: SparkSession, sf_dir: str):
         )
 
     # the stored state table — materialized, as it would be on disk
-    state = partials(initial).localCheckpoint(eager=True)
+    state = materialize(partials(initial), eager=True)
     dpart = partials(delta)
     merged = (
         state.selectExpr(
@@ -2653,14 +2654,14 @@ def q173_histogram_quantiles(spark: SparkSession, sf_dir: str):
     # exact and histogram locators (r13)
     v = docs.groupBy("lang", "n_chars").agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     n = v.groupBy("lang").agg(F.sum("c").alias("n"))
     qd = docs.sparkSession.createDataFrame(
         _HISTQ_DIM, "qtile string, num int, den int"
     )
     rq = n.crossJoin(F.broadcast(qd)).selectExpr(
         "lang", "qtile", "(num * n + den - 1) div den as r", "n"
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     wv = (
         Window.partitionBy("lang")
         .orderBy("n_chars")
@@ -3286,7 +3287,7 @@ def q185_quantile_grid_selection(spark: SparkSession, sf_dir: str):
         F.min("x").alias("mn"),
         F.max("x").alias("mx"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     qs = F.broadcast(
         ev.sparkSession.createDataFrame(
             [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4),
@@ -3326,7 +3327,7 @@ def q185_quantile_grid_selection(spark: SparkSession, sf_dir: str):
         )
         .filter("below < k and below + c >= k")
         .selectExpr("t", "bin", "q", "n", "k - below as k_in_bin")
-        .localCheckpoint(eager=False)  # <= 5 rows/group; feeds the
+        .transform(materialize)  # <= 5 rows/group; feeds the
         # candidate-bin broadcast AND the final rank join
     )
     cand = b.join(
@@ -3970,7 +3971,6 @@ _FS_ORACLE = f"""
     "at corpus scale compose finer blocking keys exactly as there.",
 )
 def q199_fs_linkage(spark: SparkSession, sf_dir: str):
-    from .llm.dedup import _persist_capped
     from .llm.text_analysis import tokens
     from .operators.linkage import Comparator, fs_classify
 
@@ -3982,7 +3982,7 @@ def q199_fs_linkage(spark: SparkSession, sf_dir: str):
     # of scanning + tokenizing the corpus once per side (the q198 lesson)
     from .session import spread_small_input
 
-    t = _persist_capped(
+    t = materialize(
         spread_small_input(docs).select(
             "doc_id",
             "lang",

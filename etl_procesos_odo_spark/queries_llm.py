@@ -51,6 +51,7 @@ from .llm.text_analysis import (
     token_count_ws,
 )
 from .registry import load_table, register
+from .session import materialize
 
 # ---------------------------------------------------------------------------
 # Shared DuckDB oracle fragments (mirror the Spark expressions verbatim)
@@ -1113,7 +1114,7 @@ def q77_corpus_prep_pack(spark: SparkSession, sf_dir: str):
     # left-anti clean join, and the gated/sample/pack chain — each
     # consumer re-ran the digest groupBy + join from the scan (r13:
     # 19 parquet scans in q77's plan). One lazy checkpoint = one pass.
-    base = docs.join(keep, "doc_id").localCheckpoint(eager=False)
+    base = docs.join(keep, "doc_id").transform(materialize)
     train = base.filter(F.col("doc_id") % 50 != 0)
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     contaminated = decontaminate(
@@ -2650,7 +2651,7 @@ def q134_pagerank_neardup(spark: SparkSession, sf_dir: str):
     # dedup_clusters)
     pairs = minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5).select(
         "id_a", "id_b"
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
@@ -2869,7 +2870,7 @@ def q138_bigram_lm_score(spark: SparkSession, sf_dir: str):
     # aggregation barrier still buys no compression). At 100 TB the
     # checkpoint materializes ~input-scale bytes to memory+disk; the
     # trade holds because it replaces two full corpus tokenize passes.
-    x = x.localCheckpoint(eager=True)
+    x = materialize(x, eager=True)
     pc = x.groupBy("pair").agg(F.count(F.lit(1)).alias("pcnt"))
     pf = x.groupBy("prev").agg(F.count(F.lit(1)).alias("fcnt"))
     cond = (
@@ -3002,7 +3003,7 @@ def q146_neardup_triangles(spark: SparkSession, sf_dir: str):
     e = (
         minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5)
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     e1 = e.select(F.col("a"), F.col("b"))
     e2 = e.select(F.col("a").alias("b2a"), F.col("b").alias("c"))
@@ -3491,7 +3492,7 @@ def q164_hll_rollup(spark: SparkSession, sf_dir: str):
         # levels; unmaterialized, each level re-scans raw events
         # (plan-audited: 6 scans -> 2). days x m rows — tiny, exactly
         # what a real pipeline would persist as its sketch table.
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
     weekly = (
         daily.selectExpr(
@@ -3568,8 +3569,9 @@ def q166_conjunctive_search(spark: SparkSession, sf_dir: str):
         "explode(array_distinct(filter("
         "array(try_element_at(words, 1), try_element_at(words, 3), "
         "try_element_at(words, 5)), x -> x is not null))) as term",
-    ).localCheckpoint()  # <= panel x 3 rows, read by qn AND the join —
-    # unmaterialized, each reference re-scans documents (plan-audited)
+    ).transform(materialize, eager=True)
+    # <= panel x 3 rows, read by qn AND the join — unmaterialized, each
+    # reference re-scans documents (plan-audited)
     qn = q.groupBy("qid").agg(F.count(F.lit(1)).alias("n_terms"))
     postings = docs.selectExpr(
         "doc_id", "explode(array_distinct(split(text, ' '))) as term"
@@ -3731,7 +3733,7 @@ def q168_kmv_source_sketch(spark: SparkSession, sf_dir: str):
         # consumed by the sketch build, the exact-count arm, and BOTH
         # sides of the exact-intersection join — checkpoint so the
         # tokenize+shingle+hash scan runs once, not four times
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     # sk feeds the source rollup AND both pair sides (ra, rb) — three
     # striped min-k passes over the cached d without a barrier; ex feeds
@@ -3741,12 +3743,12 @@ def q168_kmv_source_sketch(spark: SparkSession, sf_dir: str):
     sk = (
         kmv_min_k(d, ["source"], "h", k=K, stripes=8)
         .select("source", "h")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     ex = (
         d.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_ex"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     src = sk.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_set"), F.max("h").alias("hk")
@@ -4027,7 +4029,7 @@ def _cms_frequency_plan(spark: SparkSession, sf_dir: str, D: int, W: int):
     ).select("user_id")
     # the grid is <= d*w rows and feeds both the point probes and the
     # inner product — checkpoint instead of re-sketching the stream
-    sk1 = cms_sketch(e1, "user_id", D, W, "cms").localCheckpoint(eager=True)
+    sk1 = materialize(cms_sketch(e1, "user_id", D, W, "cms"), eager=True)
     sk2 = cms_sketch(e2, "user_id", D, W, "cms")
     # one exact per-user count table per week serves the probe panel,
     # the point-exact column, and both inner-product sides (r13: the
@@ -4036,7 +4038,7 @@ def _cms_frequency_plan(spark: SparkSession, sf_dir: str, D: int, W: int):
     cnts1 = (
         e1.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     panel = cnts1.filter("user_id % 13 = 0").select("user_id")
     pest = cms_point_estimates(sk1, panel, "user_id", D, W, "cms")
@@ -4323,7 +4325,7 @@ def q183_hierarchical_budget(spark: SparkSession, sf_dir: str):
             "1 + sum(case when n_chars between 100 and 1000 "
             "then 1 else 0 end)"
         ).alias("w"),
-    ).localCheckpoint(eager=False)  # feeds lg AND s2in: one corpus scan
+    ).transform(materialize)  # feeds lg AND s2in: one corpus scan
     lg = src.groupBy("lang").agg(
         F.sum("cap").alias("cap"), F.sum("w").alias("w")
     )
@@ -4851,12 +4853,11 @@ _KEYNESS_ORACLE = f"""
 def q198_keyness_terms(spark: SparkSession, sf_dir: str):
     from pyspark.sql import Window
 
-    from .llm.dedup import _persist_capped
     from .llm.text_analysis import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     u = docs.select("lang", F.explode(tokens(F.col("text"))).alias("t"))
-    cl = _persist_capped(
+    cl = materialize(
         u.groupBy("lang", "t").agg(F.count(F.lit(1)).alias("c_in"))
     )
     ct = cl.groupBy("t").agg(F.sum("c_in").alias("c_tot"))

@@ -30,6 +30,7 @@ from .operators.joins import broadcast_dim_join, spine_left_join_fill
 from .operators.partitioner import balanced_partition
 from .operators.windows import dedup_first, top_n_per_group
 from .registry import davg, dsum, load_table, o_davg, o_dsum, register
+from .session import materialize
 
 
 def _utc(spark: SparkSession) -> None:
@@ -2033,13 +2034,13 @@ def q191_join_audit(spark: SparkSession, sf_dir: str):
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderkey").alias("k"))
         .agg(F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     rc = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("k"))
         .agg(F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     hist = (
         lc.groupBy("m")
@@ -2166,7 +2167,7 @@ def q192_deletion_cascade(spark: SparkSession, sf_dir: str):
     del_keys = (
         cust.filter("c_custkey % 97 = 0")
         .distinct()
-        .localCheckpoint(eager=False)  # the erasure-request key list
+        .transform(materialize)  # the erasure-request key list
     )
     of = orders.join(
         del_keys, orders["o_custkey"] == del_keys["c_custkey"], "left"
@@ -2178,7 +2179,7 @@ def q192_deletion_cascade(spark: SparkSession, sf_dir: str):
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col("_del").cast("int")).alias("n_del_rows"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     oagg = okeys.agg(
         F.sum("n_del_rows").alias("do"), F.sum("n_rows").alias("to")

@@ -533,13 +533,13 @@ def q156_streaming_decontaminate(spark: SparkSession, sf_dir: str):
     from .llm.dedup import (
         BLOOM_K,
         BLOOM_M_BITS,
-        _persist_capped,
         _spread,
         bloom_bitmap_bits,
         bloom_probe_filter,
         shingles,
     )
     from .registry import load_table
+    from .session import materialize
     from .streaming.temporal import documents_stream, run_append_partials
 
     docs = load_table(spark, sf_dir, "documents")
@@ -554,7 +554,7 @@ def q156_streaming_decontaminate(spark: SparkSession, sf_dir: str):
         .filter(F.col("_df") <= 10)
         .select("g")
     )
-    b = _persist_capped(b.join(keep, "g"))
+    b = materialize(b.join(keep, "g"))
     bits = bloom_bitmap_bits(b.select("g").distinct(), "g")
 
     stream = documents_stream(spark, sf_dir).filter(F.col("doc_id") % 37 != 0)
@@ -565,7 +565,9 @@ def q156_streaming_decontaminate(spark: SparkSession, sf_dir: str):
         "doc_id", F.explode(shingles(F.col("text"), 3)).alias("g")
     )
     surv = t.filter(bloom_probe_filter(F.col("g"), bits, BLOOM_M_BITS, BLOOM_K))
-    matched = surv.join(b, "g").select("doc_id", "b_id")
+    # build-side hint: the materialised b carries a join-size estimate,
+    # not its real size — see llm.dedup.decontaminate_bloom
+    matched = surv.join(b.hint("shuffle_hash"), "g").select("doc_id", "b_id")
 
     # the matched-pair stream grows ~96x from sf0.1 to sf1 (64,345 ->
     # 6,181,482 rows — both join sides grow with the corpus until the

@@ -3,14 +3,38 @@
 Local-mode settings follow the harness contract (local[$SPARK_GRAFT_CPUS],
 32 shuffle partitions ~ cores); at cluster scale the same builder is reused
 with master/shuffle-partitions supplied by the deployment, and AQE re-plans
-shuffle sizing and skew joins at runtime.
+shuffle sizing and skew joins at runtime. ``materialize`` is the one way
+the library keeps a reused frame; its form follows the master.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+_TRUE_SPELLINGS = ("1", "true", "yes", "on")
+_FALSE_SPELLINGS = ("", "0", "false", "no", "off")
+
+
+def _env_flag(name: str) -> bool:
+    """Boolean env knob: unset/empty is false; any value outside the
+    known true/false spellings (case- and whitespace-insensitive) raises
+    ``ValueError`` naming the variable."""
+    raw = os.environ.get(name, "")
+    value = raw.strip().lower()
+    if value in _TRUE_SPELLINGS:
+        return True
+    if value in _FALSE_SPELLINGS:
+        return False
+    raise ValueError(
+        f"{name}={raw!r} is not a boolean: use one of "
+        f"{'/'.join(_TRUE_SPELLINGS)} or {'/'.join(_FALSE_SPELLINGS[1:])}"
+    )
 
 
 def get_spark(
@@ -26,6 +50,7 @@ def get_spark(
     partition coalescing and skew-join splitting at scale.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    prefer_smj = _env_flag("SPARK_GRAFT_PREFER_SMJ")  # raises on a typo
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -54,16 +79,9 @@ def get_spark(
         # deployment where build-side estimates are untrustworthy can
         # revert via SPARK_GRAFT_PREFER_SMJ=true without a code change.
         # AQE skew-join splitting covers SHJ as well as SMJ in Spark 3.3+.
-        # env value normalized (r13 advice): Spark only accepts
-        # case-insensitive true/false for boolean confs, so '1'/'yes'/
-        # 'True ' must map to 'true' instead of failing session
-        # construction with IllegalArgumentException
         .config(
             "spark.sql.join.preferSortMergeJoin",
-            "true"
-            if os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false")
-            .strip().lower() in ("1", "true", "yes")
-            else "false",
+            "true" if prefer_smj else "false",
         )
         # r14 (adverse-condition arm, plans/r14/shj_adverse.py): on a
         # deliberately misestimated build side (28-37 MB file estimate,
@@ -93,6 +111,10 @@ def get_spark(
         # blocks and localCheckpoint RDDs promptly instead of at the default
         # 30-min ContextCleaner GC tick
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # ...and the reliable-checkpoint files materialize() writes under
+        # a non-local master, which Spark otherwise keeps until the
+        # checkpoint directory is removed
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # surface Python-worker native crashes with a stack instead of a
         # silent executor death (diagnosis aid for the Arrow/UDF paths)
         .config("spark.python.worker.faulthandler.enabled", "true")
@@ -105,34 +127,61 @@ def get_spark(
     return spark
 
 
-def multi_consumer_barrier(df):
-    """Lineage barrier for a SMALL frame consumed by several downstream
-    branches (the r13 lazy-checkpoint pattern: without a barrier every
-    consumer re-runs the corpus-scale subtree that built the frame).
+def _in_process_master(spark: SparkSession) -> bool:
+    """True when executors run inside the driver JVM (``local`` /
+    ``local[N]``); ``local-cluster[...]`` and real cluster masters have
+    executors that can be lost independently of the driver."""
+    master = spark.sparkContext.master
+    return master == "local" or master.startswith("local[")
 
-    Default: ``localCheckpoint(eager=False)`` — persist semantics plus
-    lineage truncation, zero extra jobs, the measured-fastest form in
-    local mode. CLUSTER-SAFETY NOTE (r13 verdict item 6): localCheckpoint
-    data lives only in executor block managers and its lineage is
-    TRUNCATED, so on a real cluster losing an executor after
-    materialization makes the frame unrecoverable and fails the job. The
-    frames this pattern guards are KB-scale (stats/prefix tables,
-    candidate-pair lists), so the exposure window is tiny — but a 100 TB
-    deployment that cannot tolerate it sets
-    ``SPARK_GRAFT_CLUSTER_SAFE_BARRIER=true`` to get
-    ``persist(MEMORY_AND_DISK)`` instead: same multi-consumer reuse, full
-    lineage retained, recomputable on executor loss. Results are
-    identical either way (tests/test_llm.py pins this); the persist form
-    keeps the subtree in the plan, so it re-planned-costs slightly more
-    and recomputes on loss rather than failing.
+
+def _shared_checkpoint_dir(spark: SparkSession) -> None:
+    """Make sure reliable checkpoints have a directory. A deployment sets
+    one on storage every executor reaches (``spark.checkpoint.dir`` or
+    ``SparkContext.setCheckpointDir``); ``local-cluster`` executors share
+    the driver's host, so a driver temp dir serves there."""
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is not None:
+        return
+    if not sc.master.startswith("local"):
+        raise RuntimeError(
+            f"materialize() under master {sc.master!r} needs a checkpoint "
+            "directory on storage every executor reaches: set "
+            "spark.checkpoint.dir"
+        )
+    path = tempfile.mkdtemp(prefix="etl-odo-checkpoint-")
+    atexit.register(shutil.rmtree, path, True)
+    sc.setCheckpointDir(path)
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialise a frame that several consumers (or loop rounds) read,
+    so its subtree runs once. The only place the library persists,
+    caches or checkpoints; callers must use the returned frame.
+
+    Both forms cut the frame's lineage, so loop rounds keep a flat plan,
+    and both are released by the ContextCleaner once the returned frame
+    is garbage (periodicGC pinned at 2 min above) — never earlier: a
+    caller may build a frame now and run its action later, and releasing
+    a checkpoint before that action loses data. The form follows the
+    master:
+
+    - In-process master (``local``/``local[N]``):
+      ``localCheckpoint(eager)``. Executors share the driver's fate, so
+      keeping the data only in executor blocks costs nothing.
+    - Any other master, ``local-cluster`` included: a reliable
+      ``checkpoint`` written to the checkpoint directory, which survives
+      the loss of the executor that computed it. It is always eager: a
+      lazy reliable checkpoint computes the frame more than once (twice
+      for a two-consumer first action, measured), an eager one once.
+      The files are removed with the frame because get_spark sets
+      ``spark.cleaner.referenceTracking.cleanCheckpoints``.
     """
-    if os.environ.get("SPARK_GRAFT_CLUSTER_SAFE_BARRIER", "").strip().lower() in (
-        "1", "true", "yes",
-    ):
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint(eager=False)
+    spark = df.sparkSession
+    if _in_process_master(spark):
+        return df.localCheckpoint(eager=eager)
+    _shared_checkpoint_dir(spark)
+    return df.checkpoint(eager=True)
 
 
 def spread_small_input(df):
@@ -202,8 +251,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _normalize_timestamps(df)
     return _normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-
-
-def load_star(spark: SparkSession, sf_dir: str) -> dict:
-    """All harness tables as a dict of DataFrames (lazy — no reads yet)."""
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -2,7 +2,6 @@ from .readers import (
     find_column,
     read_csv,
     read_parquet,
-    require_columns,
     select_existing,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "find_column",
     "read_csv",
     "read_parquet",
-    "require_columns",
     "select_existing",
 ]

@@ -55,17 +55,6 @@ def find_column(
     return hits[-1] if last else hits[0]
 
 
-def require_columns(df: DataFrame, cols: Sequence[str]) -> list[str]:
-    """Return the subset of ``cols`` missing from ``df`` (empty = all ok).
-
-    The caller decides whether to degrade (reference app.py:27-35 warns and
-    keeps the intersection) or abort (sheet check,
-    indicador-modelo-vs-facturacion.py:411-417).
-    """
-    have = {c.lower() for c in df.columns}
-    return [c for c in cols if c.lower() not in have]
-
-
 def select_existing(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Project onto the intersection of ``cols`` and the actual schema.
 

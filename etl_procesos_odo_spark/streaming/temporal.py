@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, with the same nanos→micros
@@ -76,23 +78,21 @@ def run_to_memory(
     return the result as a local batch DataFrame (bounded-input smoke path).
 
     Export path (r14, guide §5 — the driver should do no data work): a
-    BIG sink (> ``_DRIVER_EXPORT_MAX_ROWS``) is materialized into the JVM
-    block manager with one eager ``localCheckpoint`` and the temp view
-    dropped before returning; r13 and earlier always ``collect()``-ed the
-    sink to the Python driver and rebuilt a DataFrame from local rows — a
-    round-trip that WAS the dominant cost of the big-output streaming
-    queries (q69's 954,939 session rows at sf1: 28.8 s -> 10.3 s
-    min-of-reps in the interleaved family A/B, q43 14.8 -> 3.7, q40
-    5.2 -> 1.9; plans/r14/ab_stream_export.py). SMALL sinks keep the
-    driver-local export: for a few thousand rows the collect+rebuild is
-    cheaper than the extra checkpoint job and keeps downstream consumers
-    on local rows (the same A/B measured blanket checkpointing +0.3 to
-    +2.3 s on q113/q131/q161/q174, all small-output). The sink row count
-    that picks the path is one in-memory count job over the finished
-    sink. The release contract is unchanged in spirit: the temp view is
-    gone before returning, and checkpointed blocks are freed by the
-    ContextCleaner (session.py pins periodicGC at 2 min) once the caller
-    drops the returned frame — a long correctness session still cannot
+    BIG sink (> ``_DRIVER_EXPORT_MAX_BYTES``) is kept in the engine with
+    one eager ``session.materialize`` (a checkpoint); r13 and
+    earlier always ``collect()``-ed the sink to the Python driver and
+    rebuilt a DataFrame from local rows — a round-trip that WAS the
+    dominant cost of the big-output streaming queries (q69's 954,939
+    session rows at sf1: 28.8 s -> 10.3 s min-of-reps in the interleaved
+    family A/B, q43 14.8 -> 3.7, q40 5.2 -> 1.9;
+    plans/r14/ab_stream_export.py). SMALL sinks keep the driver-local
+    export: for a few thousand rows the collect+rebuild is cheaper than
+    the extra checkpoint job and keeps downstream consumers on local rows
+    (the same A/B measured blanket checkpointing +0.3 to +2.3 s on
+    q113/q131/q161/q174, all small-output). The path is picked from the
+    sink's size statistics, which cost no job. The temp view is gone
+    before returning, and the ContextCleaner frees the checkpoint with
+    the returned frame — a long correctness session still cannot
     accumulate sink tables or streaming state across queries. Production
     replaces this sink with Kafka/Delta — nothing upstream changes.
     """
@@ -124,6 +124,9 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
     sink = spark.table(name)
+    # drop the view first: the analyzed frame keeps the sink, and both
+    # exports below read only that frame
+    spark.catalog.dropTempView(name)
     try:
         # MemoryPlan statistics are computed from the driver-held sink
         # rows — reading them costs ~15 ms and NO job, where a count()
@@ -132,16 +135,14 @@ def run_to_memory(
             sink._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # internals moved: fall back to an exact count job
+        # 20,000 rows ~ _DRIVER_EXPORT_MAX_BYTES at ~50 B/row, the
+        # narrow (key, count/timestamp) rows these sinks hold
         sink_bytes = (
             0 if sink.count() <= 20_000 else _DRIVER_EXPORT_MAX_BYTES + 1
         )
     if sink_bytes <= _DRIVER_EXPORT_MAX_BYTES:
-        rows, schema = sink.collect(), sink.schema
-        spark.catalog.dropTempView(name)
-        return spark.createDataFrame(rows, schema)
-    out = sink.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+        return spark.createDataFrame(sink.collect(), sink.schema)
+    return materialize(sink, eager=True)
 
 
 # Export-path cutover (see run_to_memory): below this the driver-local

@@ -95,15 +95,14 @@ def q138_variant_c(spark, sf_dir):
 
 
 def q157_variant_d(spark, sf_dir):
-    """remove_duplicated_grams with tagged dual-slot persists on gd AND
-    covered (the r13-rejected shape, re-measured at sf1)."""
+    """remove_duplicated_grams materialising both gd AND covered (the
+    r13-rejected shape, re-measured at sf1)."""
     from pyspark.sql import Window
 
-    from etl_procesos_odo_spark.llm.dedup import (
-        _persist_capped_tagged, ngrams_all,
-    )
+    from etl_procesos_odo_spark.llm.dedup import ngrams_all
     from etl_procesos_odo_spark.llm.text_analysis import tokens
     from etl_procesos_odo_spark.registry import load_table
+    from etl_procesos_odo_spark.session import materialize
     from etl_procesos_odo_spark.session import spread_small_input as _spread
 
     df, text_col, id_col, k, min_count = (
@@ -114,8 +113,8 @@ def q157_variant_d(spark, sf_dir):
     g = _spread(df).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(ngrams_all(F.col(text_col), k)).alias("pos", "gram"))
-    gd = _persist_capped_tagged(
-        g.groupBy("gram", "doc_id").agg(F.count("*").alias("m")), "r14_gd")
+    gd = materialize(
+        g.groupBy("gram", "doc_id").agg(F.count("*").alias("m")))
     dup_keys = (
         gd.groupBy("gram").agg(F.sum("m").alias("tot"))
         .filter(F.col("tot") >= min_count).select("gram"))
@@ -125,7 +124,7 @@ def q157_variant_d(spark, sf_dir):
             "doc_id",
             F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("wpos"))
         .distinct())
-    covered = _persist_capped_tagged(covered, "r14_covered")
+    covered = materialize(covered)
     win = Window.partitionBy("doc_id").orderBy("wpos")
     spans = (
         covered.withColumn(

@@ -2713,15 +2713,17 @@ def test_fractional_max_df_denominator_includes_shingleless_docs(spark):
     assert decon(0.5) != decon(3)
 
 
-def test_cluster_safe_barrier_switch_identical_results(spark, monkeypatch):
-    """r13 verdict item 6: SPARK_GRAFT_CLUSTER_SAFE_BARRIER=true swaps the
-    multi-consumer lazy-localCheckpoint barrier for persist(MEMORY_AND_DISK)
-    (recomputable on executor loss — lineage retained). Results must be
-    identical, and the switch must actually change the barrier mechanism."""
-    from pyspark import StorageLevel
+def test_materialize_branches_identical_results(spark, monkeypatch):
+    """session.materialize picks its form from the master: an in-process
+    master gets a localCheckpoint, any other master a reliable checkpoint
+    written to the checkpoint directory, which survives executor loss.
+    budget_waterfill (two materialised frames) must return identical
+    rows under both, and only the cluster form writes checkpoint files."""
+    import os
 
+    from etl_procesos_odo_spark import session
     from etl_procesos_odo_spark.llm.sampling import budget_waterfill
-    from etl_procesos_odo_spark.session import multi_consumer_barrier
+    from etl_procesos_odo_spark.session import materialize
 
     stats = spark.createDataFrame(
         [("s1", 100, 1), ("s2", 50, 2), ("s3", 10, 5), ("s4", 1000, 1)],
@@ -2736,17 +2738,45 @@ def test_cluster_safe_barrier_switch_identical_results(spark, monkeypatch):
             ).collect()
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_CLUSTER_SAFE_BARRIER", raising=False)
-    default_rows = run()
-    barrier_default = multi_consumer_barrier(stats.select("source"))
-    assert barrier_default.storageLevel == StorageLevel.NONE  # checkpoint form
+    def checkpoint_files():
+        d = spark.sparkContext.getCheckpointDir()
+        if d is None:
+            return set()
+        root = d.removeprefix("file:")
+        return {os.path.join(p, f) for p, _, fs in os.walk(root) for f in fs}
 
-    monkeypatch.setenv("SPARK_GRAFT_CLUSTER_SAFE_BARRIER", "true")
-    safe_rows = run()
-    barrier_safe = multi_consumer_barrier(stats.select("source"))
-    try:
-        assert barrier_safe.storageLevel == StorageLevel.MEMORY_AND_DISK
-    finally:
-        barrier_safe.unpersist()
+    assert session._in_process_master(spark)  # the test session is local[N]
+    local_rows = run()
+    before = checkpoint_files()
+    local = materialize(stats.select("source"), eager=True)
+    assert checkpoint_files() == before
+    assert "LogicalRDD" in local._jdf.queryExecution().analyzed().toString()
 
-    assert default_rows == safe_rows and default_rows
+    monkeypatch.setattr(session, "_in_process_master", lambda _spark: False)
+    cluster_rows = run()
+    before = checkpoint_files()
+    reliable = materialize(stats.select("source"))  # eager in this branch
+    assert checkpoint_files() - before
+    assert "LogicalRDD" in reliable._jdf.queryExecution().analyzed().toString()
+
+    assert local_rows == cluster_rows and local_rows
+
+
+def test_cc_bigstar_cluster_branch_plan_stays_flat(spark, monkeypatch):
+    """Under a non-local master each cc_bigstar round is a reliable
+    checkpoint, so the returned plan does not grow with the round count
+    (each round reads the previous edge set ~12 times; a lineage-keeping
+    form would grow the plan geometrically over max_iter)."""
+    from etl_procesos_odo_spark import session
+
+    monkeypatch.setattr(session, "_in_process_master", lambda _spark: False)
+    edges = [(i + 1, i) if i % 3 else (i, i + 1) for i in range(39)]
+    df = spark.createDataFrame(edges, "u long, v long")
+
+    def plan_lines(out):
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return len(plan.splitlines())
+
+    out = cc_bigstar(df, max_iter=8)
+    assert {r["cluster_id"] for r in out.collect()} == {0}
+    assert plan_lines(out) == plan_lines(cc_bigstar(df, max_iter=1))

@@ -33,6 +33,35 @@ def plan(spark):
     return _plan
 
 
+@pytest.fixture(scope="module")
+def registry_lints(spark):
+    """Build every registry query ONCE and collect the offenders of the
+    three registry-wide lints from that one frame: complex-typed output
+    columns (schema), unbounded global windows (optimized plan) and
+    CartesianProduct (physical plan). Building a plan runs jobs (eager
+    checkpoints, streaming backfills), so one pass instead of three;
+    each frame is dropped once it has been checked."""
+    complex_cols: list[str] = []
+    windows: dict[str, list[str]] = {}
+    cartesian: list[str] = []
+    for q in registry():
+        df = q.spark_fn(spark, SF_DIR)
+        for f in df.schema.fields:
+            if f.dataType.typeName() in ("array", "map", "struct"):
+                complex_cols.append(
+                    f"{q.name}.{f.name}: {f.dataType.simpleString()}"
+                )
+        bad = _lint_unpartitioned_windows(df)
+        if bad:
+            windows[q.name] = bad
+        if "CartesianProduct" in (
+            df._jdf.queryExecution().executedPlan().toString()
+        ):
+            cartesian.append(q.name)
+        del df
+    return {"complex": complex_cols, "windows": windows, "cartesian": cartesian}
+
+
 def test_filter_pushdown_reaches_scan(plan):
     p = plan("q02_filter_project", "formatted")
     assert "GreaterThan(value,50.0)" in p  # predicate at the parquet scan
@@ -195,19 +224,15 @@ def test_scan_expression_ops_no_shuffle_round2(plan):
     assert "Exchange" not in plan("q83_pii_mask")
 
 
-def test_no_complex_typed_output_columns(spark):
+def test_no_complex_typed_output_columns(registry_lints):
     """Driver-canonicalizer guard (round-2 VERDICT): the external harness
     materializes results through pandas, and Array/Map/Struct cells crash
     its sort (``TypeError: unhashable type: 'list'`` — q80/q62 in r2).
     Every registry query must end in a scalar-only projection: operators
     may carry arrays internally, but the registry surface serializes them
-    (array_join / to_json). Schema-only — no job is executed."""
-    offenders = []
-    for q in registry():
-        schema = QS[q.name].spark_fn(spark, SF_DIR).schema
-        for f in schema.fields:
-            if f.dataType.typeName() in ("array", "map", "struct"):
-                offenders.append(f"{q.name}.{f.name}: {f.dataType.simpleString()}")
+    (array_join / to_json). Checked on each query's schema in the shared
+    registry_lints pass."""
+    offenders = registry_lints["complex"]
     assert not offenders, offenders
 
 
@@ -390,12 +415,13 @@ FAMILY_SENTINELS = {
 
 def test_shingle_filter_not_pushed_below_spread(spark):
     """Round-3 perf regression guard: the empty-shingle filter in
-    minhash_lsh_pairs must evaluate against the persisted shingle array,
-    NOT be predicate-pushed below the spread exchange — pushed, it
+    minhash_lsh_pairs must evaluate against the materialised shingle
+    array, NOT be predicate-pushed below the spread exchange — pushed, it
     re-evaluates the whole tokenize+shingle expression single-threaded in
     the scan task (measured: 2.5 s of q47's 6 s at sf0.1, the r2
-    regression). The cache boundary is the barrier: no Filter node in the
-    physical plan may contain the shingle expression tree."""
+    regression). The session.materialize boundary is the barrier: no
+    Filter node in the physical plan may contain the shingle expression
+    tree."""
     import re
 
     from etl_procesos_odo_spark.llm.dedup import minhash_lsh_pairs
@@ -486,12 +512,17 @@ def test_quantized_rerank_ivf_no_full_crossjoin(spark):
     assert p.count("BroadcastNestedLoopJoin") == 2, p
 
 
-def test_semantic_dedup_no_cross_cluster_pairs(plan):
+def test_semantic_dedup_no_cross_cluster_pairs(plan, monkeypatch):
     """q103: the only nested-loop joins are the BROADCAST centroid
     assignments inherited from the Lloyd step (build side = n_cells
     rows); the pairwise-cosine stage is an EQUI-join on the cluster id,
     so cross-cluster pairs are structurally impossible and the quadratic
-    term stays bounded per cluster at any corpus size."""
+    term stays bounded per cluster at any corpus size. The assignment
+    runs below q103's materialised frames, which a checkpoint hides, so
+    the plan is taken with materialisation passed through."""
+    from etl_procesos_odo_spark.llm import similarity
+
+    monkeypatch.setattr(similarity, "materialize", lambda df, eager=False: df)
     p = plan("q103_semantic_dedup")
     assert "CartesianProduct" not in p, p
     # centroid broadcasts exist (Lloyd-step shape, same as q87)...
@@ -931,18 +962,13 @@ def _lint_unpartitioned_windows(df) -> list[str]:
     return bad
 
 
-def test_no_unbounded_global_windows_anywhere(spark):
+def test_no_unbounded_global_windows_anywhere(registry_lints):
     """Every query in the registry: any Window without a PARTITION BY
     must sit on a frame the lint can bound (see
     _lint_unpartitioned_windows). Adding a raw-facts global window —
     the single-reducer cliff at 100 TB — fails this test with the
     offending query name and window."""
-    violations: dict[str, list[str]] = {}
-    for q in registry():
-        df = q.spark_fn(spark, SF_DIR)
-        bad = _lint_unpartitioned_windows(df)
-        if bad:
-            violations[q.name] = bad
+    violations = registry_lints["windows"]
     assert not violations, violations
 
 
@@ -992,15 +1018,14 @@ def test_keyness_join_inputs_are_post_aggregate(plan):
     simple = plan("q198_keyness_terms")
     assert "HashAggregate" in simple
     # single-corpus-pass shape: the tokenize-explode runs once, INSIDE
-    # the persisted cl subtree — explain re-prints the cached plan under
-    # each InMemoryRelation consumer, so every Generate occurrence must
-    # be one of those re-prints (equal counts) and the cache boundary
-    # must exist at all. Removing the persist (4 live re-tokenizations,
-    # the pre-r8 shape) or adding a raw explode outside the cache breaks
-    # the equality.
+    # the materialised cl subtree, which the checkpoint
+    # (session.materialize) shows as Scan ExistingRDD. So the boundary
+    # must exist and no Generate may be visible outside it. Removing the
+    # barrier (4 live re-tokenizations, the pre-r8 shape) or adding a raw
+    # explode outside it breaks the check.
     n_gen = simple.count("Generate explode")
-    n_imr = simple.count("InMemoryRelation")
-    assert n_imr >= 1 and n_gen == n_imr, (n_gen, n_imr)
+    n_ckpt = simple.count("Scan ExistingRDD")
+    assert n_ckpt >= 1 and n_gen == 0, (n_gen, n_ckpt)
 
 
 def test_cdc_chunks_scan_speed_no_shuffle(plan):
@@ -1014,7 +1039,7 @@ def test_cdc_chunks_scan_speed_no_shuffle(plan):
     assert p.count("Exchange") <= 1
 
 
-def test_no_cartesian_product_anywhere(spark):
+def test_no_cartesian_product_anywhere(registry_lints):
     """Registry-wide machine-check of the anti-pattern sweep: NO query's
     physical plan may contain a CartesianProduct. All of the repo's
     crossJoins are broadcast 1-row/tiny frames, which plan as
@@ -1022,16 +1047,7 @@ def test_no_cartesian_product_anywhere(spark):
     broadcast hint was lost (e.g. behind a checkpoint/persist boundary,
     where the frame has no stats) and a quadratic shuffle ships at
     scale."""
-    offenders = []
-    for q in registry():
-        p = (
-            q.spark_fn(spark, SF_DIR)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        if "CartesianProduct" in p:
-            offenders.append(q.name)
+    offenders = registry_lints["cartesian"]
     assert not offenders, offenders
 
 
