@@ -1,14 +1,32 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk`` — brute-force exact top-k: the baseline. The dot product
-  is a sequential left fold in double precision, matching DuckDB's
-  ``list_reduce`` element order bit-for-bit for the oracle.
-- ``lsh_bucket_topk`` — the scale path: deterministic random-hyperplane
-  LSH buckets; candidates only within the query's bucket. At 100 TB the
-  corpus is bucketed once (8-bit signature → 256-way partition key) and a
-  query touches 1/256 of the data; the bucket join shuffles signature keys
-  only.
+Every search here has one shape: pair the candidates, score each pair by
+``cosine``, then keep the top k per key (``_topk``, one
+``operators.windows.top_n_per_group`` window; ties go to the lowest id).
+The functions differ in how they pair candidates:
 
+- all pairs, for a bounded query panel: a crossJoin (``cosine_topk``,
+  ``hard_negatives_topk``, ``quantized_rerank_topk``);
+- a shared random-hyperplane LSH bucket: an equi-join on the bucket key
+  (``lsh_bucket_topk``, ``lsh_bucket_topk_multiprobe``,
+  ``cosine_neardup_pairs``). At 100 TB the corpus is bucketed once and a
+  query touches 1/256 of it; only signature keys shuffle;
+- shared IVF cells (``ivf_topk``, ``hard_negatives_topk_ivf``,
+  ``quantized_rerank_topk_ivf``): ``_nearest_cells`` assigns both sides
+  to their nearest centroids through a broadcast crossJoin, and the
+  posting lists join on the cell key.
+
+The IVF centroids are the first ``n_cells`` vectors by id
+(``_seed_cells``), or k-means trained from that seed by one Lloyd loop
+(``_lloyd``, behind ``kmeans_lloyd_step``, ``kmeans_train`` and
+``kmeans_train_centroids``) whose centroid means are exact integer
+micro-units (``_cell_means``). ``semantic_dedup`` prunes pairs within
+k-means cells, ``hybrid_rrf_topk`` fuses a lexical and a vector ranking,
+``ann_recall`` scores IVF against the exact scan, and
+``tfidf_cosine_pairs`` is the exact sparse-weight self-join.
+
+The dot product is a sequential left fold in double precision, matching
+DuckDB's ``list_reduce`` element order bit-for-bit for the oracle.
 Hyperplanes are generated from a seeded RNG at plan-build time and embedded
 as literals — deterministic across runs and engines (the oracle SQL embeds
 the same constants).
@@ -21,6 +39,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import top_n_per_group
 from ..session import materialize
 from ..session import spread_small_input as _spread
 
@@ -52,6 +71,42 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
+def _side(df: DataFrame, id_col: str, vec_col: str, key: str, vec: str,
+          *extra: Column) -> DataFrame:
+    """One side of a pairing: (key, vec, *extra) renamed from the input's
+    id and vector columns."""
+    return df.select(
+        F.col(id_col).alias(key), F.col(vec_col).alias(vec), *extra
+    )
+
+
+def _score(pairs: DataFrame, key: str, other: str, *keep: str,
+           cv: str = "cv", score: str = "cos_sim") -> DataFrame:
+    """Verify candidate pairs: (key, other, *keep, score), the cosine of
+    ``qv`` against ``cv``, with self-pairs dropped."""
+    return pairs.filter(F.col(key) != F.col(other)).select(
+        key, other, *keep, cosine(F.col("qv"), F.col(cv)).alias(score)
+    )
+
+
+def _topk(scored: DataFrame, key: str, tie: str, n: int,
+          score: str = "cos_sim", rank: str | None = "rank") -> DataFrame:
+    """The ``n`` best rows per ``key`` by ``score``, ties to the lowest
+    ``tie``; ``rank`` names the kept long rank (None drops it)."""
+    return top_n_per_group(
+        scored, [key], [F.desc(score), F.col(tie)], n, rank
+    )
+
+
+def _neighbors(pairs: DataFrame, k: int, *keep: str) -> DataFrame:
+    """(query_id, neighbor_id, *keep, cos_sim, rank): top-k neighbors of
+    each query among its (qv, cv) candidate pairs."""
+    return _topk(
+        _score(pairs, "query_id", "neighbor_id", *keep),
+        "query_id", "neighbor_id", k,
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -62,30 +117,11 @@ def cosine_topk(
     """Brute-force exact top-k cosine neighbors for each query vector.
     Excludes self-matches; ties broken by lowest corpus id.
     Returns (query_id, neighbor_id, cos_sim, rank)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = _side(queries, id_col, vec_col, "query_id", "qv")
     # spread the (often single-file) corpus scan so the pairwise cosine
     # evaluates across the cluster, not in one scan task (no-op at scale)
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    c = _side(_spread(corpus), id_col, vec_col, "neighbor_id", "cv")
+    return _neighbors(q.crossJoin(c), k)
 
 
 def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
@@ -98,15 +134,34 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]
     ]
 
 
+def _plane_dots(vec: Column, planes: list[list[float]]) -> list[Column]:
+    return [dot_double(vec, F.array(*[F.lit(x) for x in p])) for p in planes]
+
+
+def _signature(dots: list[Column]) -> Column:
+    sig = F.lit(0).cast("long")
+    for b, d in enumerate(dots):
+        sig = sig + F.when(d > 0, F.lit(2**b)).otherwise(0).cast("long")
+    return sig
+
+
 def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     """Bucket id: bit b set iff dot(vec, plane_b) > 0."""
-    sig = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        sig = sig + F.when(dot_double(vec, arr) > 0, F.lit(2**b)).otherwise(
-            0
-        ).cast("long")
-    return sig
+    return _signature(_plane_dots(vec, planes))
+
+
+def _bucket_neighbors(
+    corpus: DataFrame, q: DataFrame, planes: list[list[float]],
+    id_col: str, vec_col: str, k: int,
+) -> DataFrame:
+    """Top-k over the (query_id, qv, bucket) queries' bucket-mates."""
+    # sign the corpus across the cluster (single-file scans sign in one
+    # task otherwise; projections are not pushed below the repartition)
+    c = _side(
+        _spread(corpus), id_col, vec_col, "neighbor_id", "cv",
+        lsh_signature(F.col(vec_col), planes).alias("bucket"),
+    )
+    return _neighbors(q.join(c, on="bucket"), k, "bucket")
 
 
 def lsh_bucket_topk(
@@ -123,35 +178,11 @@ def lsh_bucket_topk(
     recall/latency trade the brute-force path can't make at scale.
     Returns (query_id, neighbor_id, bucket, cos_sim, rank)."""
     planes = hyperplanes(dim, n_planes, seed)
-    # sign the corpus across the cluster (single-file scans sign in one
-    # task otherwise; projections are not pushed below the repartition)
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
+    q = _side(
+        queries, id_col, vec_col, "query_id", "qv",
         lsh_signature(F.col(vec_col), planes).alias("bucket"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    )
-    scored = (
-        q.join(c, on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "bucket",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _bucket_neighbors(corpus, q, planes, id_col, vec_col, k)
 
 
 def lsh_bucket_topk_multiprobe(
@@ -183,20 +214,8 @@ def lsh_bucket_topk_multiprobe(
     if probe not in (1, 2):
         raise ValueError("probe must be 1 or 2 (flip-one-bit multiprobe)")
     planes = hyperplanes(dim, n_planes, seed)
-    # sign the corpus across the cluster (single-file scans sign in one
-    # task otherwise; projections are not pushed below the repartition)
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    )
-    dots = [
-        dot_double(F.col(vec_col), F.array(*[F.lit(x) for x in p]))
-        for p in planes
-    ]
-    sig = F.lit(0).cast("long")
-    for b, d in enumerate(dots):
-        sig = sig + F.when(d > 0, F.lit(2**b)).otherwise(0).cast("long")
+    dots = _plane_dots(F.col(vec_col), planes)
+    sig = _signature(dots)
     if probe == 1:
         buckets = F.array(sig)
     else:
@@ -205,28 +224,11 @@ def lsh_bucket_topk_multiprobe(
         for b in reversed(range(n_planes)):
             flip = F.when(F.abs(dots[b]) == minv, F.lit(2**b).cast("long")).otherwise(flip)
         buckets = F.array(sig, sig.bitwiseXOR(flip))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
+    q = _side(
+        queries, id_col, vec_col, "query_id", "qv",
         F.explode(buckets).alias("bucket"),
     )
-    scored = (
-        q.join(c, on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "bucket",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _bucket_neighbors(corpus, q, planes, id_col, vec_col, k)
 
 
 def cosine_neardup_pairs(
@@ -254,17 +256,11 @@ def cosine_neardup_pairs(
     # exchange); a lazy localCheckpoint here measured a wash-to-regression
     # at sf0.1 across two interleaved A/Bs (q48 -0.25 then +0.34, q136
     # +0.5) — the RDD barrier buys nothing the reuse doesn't already.
-    s = _spread(corpus).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
+    s = _side(
+        _spread(corpus), id_col, vec_col, "_id", "_v",
         lsh_signature(F.col(vec_col), planes).alias("bucket"),
     )
-    a = s.select(
-        F.col("_id").alias("id_a"), F.col("_v").alias("va"), "bucket"
-    )
-    b = s.select(
-        F.col("_id").alias("id_b"), F.col("_v").alias("vb"), "bucket"
-    )
+    a, b = (_side(s, "_id", "_v", f"id_{x}", f"v{x}", "bucket") for x in "ab")
     return (
         a.join(b, on="bucket")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -272,6 +268,43 @@ def cosine_neardup_pairs(
             "id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos_sim")
         )
         .filter(F.col("cos_sim") >= threshold)
+    )
+
+
+def _seed_cells(df: DataFrame, id_col: str, vec_col: str,
+                n_cells: int) -> DataFrame:
+    """The deterministic coarse quantizer: the first ``n_cells`` vectors
+    by id as the (cell, centv) centroid table."""
+    return _side(
+        df.filter(F.col(id_col) < n_cells), id_col, vec_col, "cell", "centv"
+    )
+
+
+def _nearest_cells(df: DataFrame, cents: DataFrame, key: str, vec: str,
+                   probes: int = 1,
+                   src: tuple[str, str] | None = None) -> DataFrame:
+    """(key, vec, cell, _cs): each row's ``probes`` nearest (cell, centv)
+    centroids by cosine ``_cs``, ties to the lowest cell. The centroid
+    table is tiny, so it is broadcast and the scoring is a narrow map.
+    ``src`` names df's (id, vector) columns when they are renamed to
+    (key, vec) on the way in."""
+    sid, svec = src or (key, vec)
+    scored = df.crossJoin(F.broadcast(cents)).select(
+        F.col(sid).alias(key), F.col(svec).alias(vec), "cell",
+        cosine(F.col(svec), F.col("centv")).alias("_cs"),
+    )
+    return _topk(scored, key, "cell", probes, "_cs", None)
+
+
+def _ivf_pairs(q: tuple, c: tuple, cents: DataFrame, nprobe: int,
+               src: tuple[str, str] | None = None) -> DataFrame:
+    """Candidate pairs through IVF cells between the (frame, key, vector)
+    sides ``q`` and ``c``: each query meets the posting lists of its
+    ``nprobe`` nearest cells; a corpus row lives in exactly one cell, so
+    the pairs are unique."""
+    (qdf, *qn), (cdf, *cn) = q, c
+    return _nearest_cells(qdf, cents, *qn, nprobe, src).drop("_cs").join(
+        _nearest_cells(cdf, cents, *cn, 1, src).drop("_cs"), on="cell"
     )
 
 
@@ -306,50 +339,16 @@ def ivf_topk(
     first-``n_cells`` coarse quantizer (q123 wires the trained table in;
     the plan shape is identical, only the broadcast build side changes).
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else corpus.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("centv")
-        )
-    )
-
-    def assign(df: DataFrame, idal: str, val: str, probes: int = 1) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            F.col(id_col).alias(idal),
-            F.col(vec_col).alias(val),
-            "cell",
-            cosine(F.col(vec_col), F.col("centv")).alias("_cs"),
-        )
-        w = Window.partitionBy(idal).orderBy(F.desc("_cs"), F.col("cell"))
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= probes)
-            .drop("_cs", "_rk")
-        )
-
+    if centroids is None:
+        centroids = _seed_cells(corpus, id_col, vec_col, n_cells)
     # assignment cosines evaluate before the window exchange, in the
     # scan task — spread the (often single-file) corpus so they
     # parallelize (no-op at scale)
-    posting = assign(_spread(corpus), "neighbor_id", "cv")
-    qcells = assign(queries, "query_id", "qv", probes=nprobe)
-    scored = (
-        qcells.join(posting, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
+    pairs = _ivf_pairs(
+        (queries, "query_id", "qv"), (_spread(corpus), "neighbor_id", "cv"),
+        centroids, nprobe, (id_col, vec_col),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _neighbors(pairs, k, "cell")
 
 
 def quantize_int8(
@@ -382,6 +381,93 @@ def quantize_int8(
     )
 
 
+def _cell_means(assigned: DataFrame) -> DataFrame:
+    """(cell, centv): the elementwise mean of each cell's ``_v`` vectors.
+
+    One shuffle keyed by (cell, component) — posexplode spreads the mean
+    over cells × dim keys, so no single reducer sees a whole cell. Means
+    are summed in integer micro-units (``round(x * 1e6)`` — ties round
+    away from zero identically in both engines, unlike double→decimal
+    casts), so the sum is exact integer arithmetic and the centroids are
+    bit-identical across engines, at a documented 1e-6 quantization."""
+    comp = assigned.select("cell", F.posexplode(F.col("_v")).alias("pos", "x"))
+    return (
+        comp.groupBy("cell", "pos")
+        .agg(
+            (
+                F.sum(
+                    F.round(F.col("x").cast("double") * 1e6).cast("long")
+                ).cast("double")
+                / (F.count("*") * F.lit(1000000)).cast("double")
+            ).alias("m")
+        )
+        .groupBy("cell")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s["m"],
+            ).alias("centv")
+        )
+    )
+
+
+def _lloyd(
+    v: DataFrame, cents: DataFrame, rounds: int, checkpoint_seed: bool = False
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``rounds`` Lloyd (k-means) iterations over the (_id, _v) vectors
+    from the (cell, centv) seed centroids: assign every vector to its
+    nearest cell, then move each centroid to its cell's mean.
+
+    Returns (seed assignment, vectors, trained centroids); an assignment
+    is (_id, _v, cell, _cs), and the final one is
+    ``_nearest_cells(vectors, centroids, "_id", "_v")``. Cells that lose
+    every member drop out of later rounds. Lineage is cut once per round
+    so the plan stays flat over the rounds: at each round's centroid
+    table, or, with ``checkpoint_seed``, at the seed assignment, which
+    then also supplies the vectors (the one-round step reads it three
+    times)."""
+    seed = a = _nearest_cells(v, cents, "_id", "_v")
+    if checkpoint_seed:
+        seed = a = materialize(a)
+        v = a.select("_id", "_v")
+    for r in range(rounds):
+        if r:
+            a = _nearest_cells(v, cents, "_id", "_v")
+        cents = _cell_means(a)
+        if not checkpoint_seed:
+            cents = materialize(cents)
+    return seed, v, cents
+
+
+def _assignments(seed: DataFrame, v: DataFrame, cents: DataFrame,
+                 id_col: str, to: str) -> DataFrame:
+    """(id, cell_init, cell_<to>, cos_<to>) from ``_lloyd``'s result: each
+    vector's seed cell, its cell under the trained centroids and the
+    cosine to that centroid."""
+    final = _nearest_cells(v, cents, "_id", "_v")
+    return seed.select("_id", F.col("cell").alias("cell_init")).join(
+        final.select("_id", "cell", F.col("_cs").alias(f"cos_{to}")), on="_id"
+    ).select(
+        F.col("_id").alias(id_col),
+        F.col("cell_init").cast("long").alias("cell_init"),
+        F.col("cell").cast("long").alias(f"cell_{to}"),
+        f"cos_{to}",
+    )
+
+
+def _train_input(corpus: DataFrame, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """The (_id, _v) vectors that every training round re-assigns."""
+    # spread the scan once; every round's assignment reuses it. NOT
+    # checkpointed (r13, measured): the per-round scan+spread Exchange
+    # subtrees are identical, so ReuseExchange already dedups them in
+    # the final plan; a localCheckpoint barrier here replaced that
+    # shuffle reuse with a row-copying deserialized RDD cache and more
+    # than doubled q111/q123 wall-clock at sf0.1 (6.2 s -> 13.9 s,
+    # 3.4 s -> 14.7 s A/B).
+    return _side(_spread(corpus), id_col, vec_col, "_id", "_v")
+
+
 def kmeans_lloyd_step(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -398,38 +484,13 @@ def kmeans_lloyd_step(
     and after the refined centroids, and the cosine to the new centroid.
 
     Scale shape per iteration: assignment is a broadcast of ``n_cells``
-    centroids (narrow map + per-row argmax window keyed by id);
-    the centroid update is ONE shuffle keyed by (cell, component) —
-    posexplode spreads the elementwise mean over cells × dim keys, so no
-    single reducer sees a whole cell; component means are computed in
-    integer micro-units (``round(x * 1e6)`` — ties round away from zero
-    identically in both engines, unlike double→decimal casts) so summation
-    is exact integer arithmetic and the refined centroids are
-    bit-identical across engines, at a documented 1e-6 centroid
-    quantization.
+    centroids (narrow map + per-row argmax window keyed by id); the
+    centroid update is ONE shuffle keyed by (cell, component) with
+    integer micro-unit means (``_cell_means``), so the refined centroids
+    are bit-identical across engines.
     """
-    cents = corpus.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("centv")
-    )
     # spread the scan: assignment cosines otherwise evaluate in one task
-    v = _spread(corpus).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-
-    def nearest(src: DataFrame, cent_df: DataFrame, out: str) -> DataFrame:
-        scored = src.crossJoin(F.broadcast(cent_df)).select(
-            "_id",
-            "_v",
-            "cell",
-            cosine(F.col("_v"), F.col("centv")).alias("_cs"),
-        )
-        w = Window.partitionBy("_id").orderBy(F.desc("_cs"), F.col("cell"))
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("_id", "_v", F.col("cell").alias(out), F.col("_cs").alias(f"_cs_{out}"))
-        )
-
+    v = _side(_spread(corpus), id_col, vec_col, "_id", "_v")
     # the seed assignment feeds the centroid update, the refined
     # re-assignment (which re-scores the SAME vectors), and the final
     # join — un-materialized, each consumer re-ran the scan + broadcast
@@ -438,39 +499,42 @@ def kmeans_lloyd_step(
     # table a production IVF build persists anyway (the semantic_dedup
     # note), and it replaces three argmax-window shuffles of the vector
     # payload with one.
-    a0 = nearest(v, cents, "cell_init").transform(materialize)
-    comp = a0.select(
-        "cell_init", F.posexplode(F.col("_v")).alias("pos", "x")
+    trained = _lloyd(
+        v, _seed_cells(corpus, id_col, vec_col, n_cells), 1,
+        checkpoint_seed=True,
     )
-    means = (
-        comp.groupBy("cell_init", "pos")
-        .agg(
-            (
-                F.sum(
-                    F.round(F.col("x").cast("double") * 1e6).cast("long")
-                ).cast("double")
-                / (F.count("*") * F.lit(1000000)).cast("double")
-            ).alias("m")
-        )
-        .groupBy("cell_init")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("centv")
-        )
-        .select(F.col("cell_init").alias("cell"), "centv")
+    return _assignments(*trained, id_col, "next")
+
+
+def _rerank(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
+    k: int, overfetch: int, pair,
+) -> DataFrame:
+    """The two stages of the int8 re-rankers. Stage 1 scores the
+    (query_id, qv) queries against the dequantised (neighbor_id, dv)
+    corpus rows that ``pair`` joins them with, keeping ``k * overfetch``
+    per query; stage 2 re-ranks those by full-precision cosine."""
+    dq = quantize_int8(corpus, vec_col, id_col).filter(F.col("scale") > 0).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.transform(
+            F.col("q"), lambda x: x.cast("double") * F.col("scale")
+        ).alias("dv"),
     )
-    a1 = nearest(a0.select("_id", "_v"), means, "cell_next")
-    return (
-        a0.select("_id", "cell_init")
-        .join(a1.select("_id", "cell_next", F.col("_cs_cell_next").alias("cos_next")), on="_id")
-        .select(
-            F.col("_id").alias(id_col),
-            F.col("cell_init").cast("long").alias("cell_init"),
-            F.col("cell_next").cast("long").alias("cell_next"),
-            "cos_next",
-        )
+    cand = _score(
+        pair(_side(queries, id_col, vec_col, "query_id", "qv"), dq),
+        "query_id", "neighbor_id", "qv", cv="dv", score="q_sim",
+    )
+    shortlist = _topk(
+        cand, "query_id", "neighbor_id", k * overfetch, "q_sim", None
+    ).select("query_id", "neighbor_id", "qv")
+    full = _side(corpus, id_col, vec_col, "neighbor_id", "cv")
+    return _topk(
+        shortlist.join(full, "neighbor_id").select(
+            "query_id",
+            "neighbor_id",
+            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
+        ),
+        "query_id", "neighbor_id", k,
     )
 
 
@@ -506,69 +570,12 @@ def quantized_rerank_topk_ivf(
     equivalence the unit test pins. Returns (query_id, neighbor_id,
     cos_sim, rank).
     """
-    qz = quantize_int8(corpus, vec_col, id_col).filter(F.col("scale") > 0)
-    dq = qz.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(
-            F.col("q"), lambda x: x.cast("double") * F.col("scale")
-        ).alias("dv"),
-    )
-    cents = corpus.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("centv")
-    )
-
-    def assign(df: DataFrame, idc: str, vc: str, probes: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            idc, vc, "cell", cosine(F.col(vc), F.col("centv")).alias("_cs")
-        )
-        w = Window.partitionBy(idc).orderBy(F.desc("_cs"), F.col("cell"))
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= probes)
-            .drop("_cs", "_rk")
-        )
-
-    posting = assign(dq, "neighbor_id", "dv", probes=1)
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    qcells = assign(qv, "query_id", "qv", probes=nprobe)
-    cand = (
-        qcells.join(posting, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "qv",
-            cosine(F.col("qv"), F.col("dv")).alias("q_sim"),
-        )
-        # a corpus vector sits in exactly one cell, but nprobe>1 queries
-        # can reach it through ties only via distinct cells — candidate
-        # rows are already unique per (query, neighbor)
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc("q_sim"), F.col("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("_rk", F.row_number().over(wc))
-        .filter(F.col("_rk") <= k * overfetch)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        shortlist.join(full, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
+    cents = _seed_cells(corpus, id_col, vec_col, n_cells)
+    return _rerank(
+        corpus, queries, id_col, vec_col, k, overfetch,
+        lambda q, dq: _ivf_pairs(
+            (q, "query_id", "qv"), (dq, "neighbor_id", "dv"), cents, nprobe
+        ),
     )
 
 
@@ -609,9 +616,8 @@ def semantic_dedup(
     # the quadratic term, so hoisting sqrt(|v|²) out of it cuts its fold
     # work 3× (dot only, vs dot + both norms). cos value is bit-identical:
     # sqrt(norm2(v)) does not depend on which row pairs it.
-    v = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
+    v = _side(
+        corpus, id_col, vec_col, "_id", "_v",
         F.sqrt(norm2(F.col(vec_col))).alias("_nrm"),
     )
     m = (
@@ -628,13 +634,10 @@ def semantic_dedup(
     # stage as one task (3.2 s vs 2.5 s warm): spread it back to the
     # session's parallelism, a no-op once m spans the cluster.
     m = _spread(materialize(m))
-    a = m.select(
-        F.col("_id").alias("id_a"), F.col("_v").alias("va"),
-        F.col("_nrm").alias("na"), "cell",
-    )
-    b = m.select(
-        F.col("_id").alias("id_b"), F.col("_v").alias("vb"),
-        F.col("_nrm").alias("nb"), "cell",
+    a, b = (
+        _side(m, "_id", "_v", f"id_{x}", f"v{x}",
+              F.col("_nrm").alias(f"n{x}"), "cell")
+        for x in "ab"
     )
     pairs = (
         a.join(b, "cell")
@@ -653,15 +656,10 @@ def semantic_dedup(
         )
         .filter(F.col("cs") >= threshold)
     )
-    wbest = Window.partitionBy("id_b").orderBy(F.desc("cs"), F.col("id_a"))
-    dup = (
-        pairs.withColumn("_rk", F.row_number().over(wbest))
-        .filter(F.col("_rk") == 1)
-        .select(
-            F.col("id_b").alias("_id"),
-            F.col("id_a").alias("dup_of"),
-            F.col("cs").alias("max_cos"),
-        )
+    dup = _topk(pairs, "id_b", "id_a", 1, "cs", None).select(
+        F.col("id_b").alias("_id"),
+        F.col("id_a").alias("dup_of"),
+        F.col("cs").alias("max_cos"),
     )
     return (
         m.select("_id", "cell")
@@ -709,49 +707,8 @@ def quantized_rerank_topk(
     envelope always matches the call — change the constants there, not
     the SQL.
     """
-    qz = quantize_int8(corpus, vec_col, id_col).filter(F.col("scale") > 0)
-    dq = qz.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(
-            F.col("q"), lambda x: x.cast("double") * F.col("scale")
-        ).alias("dv"),
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    cand = (
-        qv.crossJoin(dq)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "qv",
-            cosine(F.col("qv"), F.col("dv")).alias("q_sim"),
-        )
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc("q_sim"), F.col("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("_rk", F.row_number().over(wc))
-        .filter(F.col("_rk") <= k * overfetch)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.col("neighbor_id")
-    )
-    return (
-        shortlist.join(full, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
+    return _rerank(
+        corpus, queries, id_col, vec_col, k, overfetch, DataFrame.crossJoin
     )
 
 
@@ -813,7 +770,8 @@ def kmeans_train(
     """Multi-round Lloyd training — the full IVF-quantizer build that
     ``kmeans_lloyd_step`` (q87) proves one iteration of: a fixed number
     of assign → exact-integer-micro-unit-mean rounds from the
-    deterministic seed centroids (first ``n_cells`` vectors by id).
+    deterministic seed centroids (first ``n_cells`` vectors by id). With
+    ``rounds=1`` its rows equal ``kmeans_lloyd_step``'s.
 
     Returns (id, cell_init, cell_final, cos_final): the seed assignment,
     the assignment after ``rounds`` refinements, and the cosine to the
@@ -822,7 +780,7 @@ def kmeans_train(
     Scale shape per round (identical to q87, looped): assignment
     broadcasts ``n_cells`` centroids (narrow map + per-row argmax);
     the centroid update shuffles (cell, component) keys so no reducer
-    holds a whole cell. Each round ends in a ``localCheckpoint`` on the
+    holds a whole cell. Each round ends in a ``materialize`` of the
     (tiny) centroid frame — n_cells × dim values — truncating lineage so
     the plan stays flat instead of compounding ``rounds`` deep (the CC
     loop's rationale). A fixed round count, not a convergence test,
@@ -831,68 +789,9 @@ def kmeans_train(
     lose every member simply drop out of later rounds — identical
     semantics in both engines.
     """
-    # spread the scan once; every round's assignment reuses it. NOT
-    # checkpointed (r13, measured): the per-round scan+spread Exchange
-    # subtrees are identical, so ReuseExchange already dedups them in
-    # the final plan; a localCheckpoint barrier here replaced that
-    # shuffle reuse with a row-copying deserialized RDD cache and more
-    # than doubled q111/q123 wall-clock at sf0.1 (6.2 s -> 13.9 s,
-    # 3.4 s -> 14.7 s A/B).
-    v = _spread(corpus).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-    cents = v.filter(F.col("_id") < n_cells).select(
-        F.col("_id").alias("cell"), F.col("_v").alias("centv")
-    )
-
-    def nearest(cent_df: DataFrame) -> DataFrame:
-        scored = v.crossJoin(F.broadcast(cent_df)).select(
-            "_id", "_v", "cell",
-            cosine(F.col("_v"), F.col("centv")).alias("_cs"),
-        )
-        w = Window.partitionBy("_id").orderBy(F.desc("_cs"), F.col("cell"))
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .drop("_rk")
-        )
-
-    def micro_means(assigned: DataFrame) -> DataFrame:
-        comp = assigned.select(
-            "cell", F.posexplode(F.col("_v")).alias("pos", "x")
-        )
-        return (
-            comp.groupBy("cell", "pos")
-            .agg(
-                (
-                    F.sum(
-                        F.round(F.col("x").cast("double") * 1e6).cast("long")
-                    ).cast("double")
-                    / (F.count("*") * F.lit(1000000)).cast("double")
-                ).alias("m")
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("centv")
-            )
-        )
-
-    a = nearest(cents)
-    init = a.select("_id", F.col("cell").alias("cell_init"))
-    for _ in range(rounds):
-        cents = micro_means(a).transform(materialize)
-        a = nearest(cents)
-    return init.join(
-        a.select("_id", "cell", F.col("_cs").alias("cos_final")), on="_id"
-    ).select(
-        F.col("_id").alias(id_col),
-        F.col("cell_init").cast("long").alias("cell_init"),
-        F.col("cell").cast("long").alias("cell_final"),
-        "cos_final",
-    )
+    v = _train_input(corpus, id_col, vec_col)
+    trained = _lloyd(v, _seed_cells(v, "_id", "_v", n_cells), rounds)
+    return _assignments(*trained, id_col, "final")
 
 
 def kmeans_train_centroids(
@@ -908,59 +807,11 @@ def kmeans_train_centroids(
     is the artifact the IVF index is built against in production
     (``ivf_topk(..., centroids=...)`` — q123 closes the "production
     would k-means these" loop the ivf_topk docstring promises). Same
-    per-round scale shape and localCheckpoint lineage truncation as
+    per-round scale shape and ``materialize`` lineage truncation as
     ``kmeans_train``; cells that lose every member drop out — identical
     semantics in both engines."""
-    # no checkpoint on v — ReuseExchange dedups the per-round spread
-    # subtrees; a checkpoint barrier regressed q123 4x (see kmeans_train)
-    v = _spread(corpus).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-    cents = v.filter(F.col("_id") < n_cells).select(
-        F.col("_id").alias("cell"), F.col("_v").alias("centv")
-    )
-
-    def nearest(cent_df: DataFrame) -> DataFrame:
-        scored = v.crossJoin(F.broadcast(cent_df)).select(
-            "_id", "_v", "cell",
-            cosine(F.col("_v"), F.col("centv")).alias("_cs"),
-        )
-        w = Window.partitionBy("_id").orderBy(F.desc("_cs"), F.col("cell"))
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .drop("_rk")
-        )
-
-    def micro_means(assigned: DataFrame) -> DataFrame:
-        comp = assigned.select(
-            "cell", F.posexplode(F.col("_v")).alias("pos", "x")
-        )
-        return (
-            comp.groupBy("cell", "pos")
-            .agg(
-                (
-                    F.sum(
-                        F.round(F.col("x").cast("double") * 1e6).cast("long")
-                    ).cast("double")
-                    / (F.count("*") * F.lit(1000000)).cast("double")
-                ).alias("m")
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("centv")
-            )
-        )
-
-    a = nearest(cents)
-    for i in range(rounds):
-        cents = micro_means(a).transform(materialize)
-        if i < rounds - 1:  # the last round's re-assignment feeds nothing
-            a = nearest(cents)
-    return cents
+    v = _train_input(corpus, id_col, vec_col)
+    return _lloyd(v, _seed_cells(v, "_id", "_v", n_cells), rounds)[2]
 
 
 def hybrid_rrf_topk(
@@ -1028,7 +879,7 @@ def hybrid_rrf_topk(
     # without the barrier, Catalyst evaluates the whole tokenize/shingle
     # tree inside the (often single-partition) scan task feeding the
     # nested-loop join — the q64 lesson; measured 20x on this arm at
-    # sf0.1 (10 s -> 0.5 s). localCheckpoint doubles as the pushdown
+    # sf0.1 (10 s -> 0.5 s). The checkpoint doubles as the pushdown
     # barrier so the size filter cannot sink below the exchange.
     sc = docs.sparkSession.sparkContext
     sh = (
@@ -1079,52 +930,33 @@ def hybrid_rrf_topk(
         )
     else:
         raise ValueError(f"lex_route must be 'scan' or 'lsh', got {lex_route!r}")
-    wl = Window.partitionBy("query_id").orderBy(
-        F.desc("jac"), F.col("doc_id")
+    lex = _topk(lex_scored, "query_id", "doc_id", pool, "jac", "rank_lex").select(
+        "query_id", "doc_id", "rank_lex"
     )
-    lex = (
-        lex_scored.withColumn("rank_lex", F.row_number().over(wl).cast("long"))
-        .filter(F.col("rank_lex") <= pool)
-        .select("query_id", "doc_id", "rank_lex")
-    )
+    panel = emb.filter(F.col("vec_id") < n_queries)
     if vec_route == "ivf":
-        vec = ivf_topk(
-            emb,
-            emb.filter(F.col("vec_id") < n_queries),
-            n_cells=n_cells,
-            k=pool,
-            nprobe=nprobe,
-        ).select(
-            "query_id",
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rank").alias("rank_vec"),
-        )
+        vec = ivf_topk(emb, panel, n_cells=n_cells, k=pool, nprobe=nprobe)
     elif vec_route == "scan":
-        vec = cosine_topk(
-            emb, emb.filter(F.col("vec_id") < n_queries), k=pool
-        ).select(
-            "query_id",
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rank").alias("rank_vec"),
-        )
+        vec = cosine_topk(emb, panel, k=pool)
     else:
         raise ValueError(f"vec_route must be 'scan' or 'ivf', got {vec_route!r}")
+    vec = vec.select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").alias("rank_vec"),
+    )
     fused = lex.join(vec, on=["query_id", "doc_id"], how="full_outer")
-    score = F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("rank_lex")).cast("double"),
-        F.lit(0.0),
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("rank_vec")).cast("double"),
-        F.lit(0.0),
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.col("doc_id")
-    )
-    return (
+
+    def rrf(rank: str) -> Column:
+        return F.coalesce(
+            F.lit(1.0) / (F.lit(rrf_k) + F.col(rank)).cast("double"), F.lit(0.0)
+        )
+
+    score = rrf("rank_lex") + rrf("rank_vec")
+    return _topk(
         fused.select("query_id", "doc_id", "rank_lex", "rank_vec",
-                     score.alias("rrf_score"))
-        .withColumn("rank", F.row_number().over(wf).cast("long"))
-        .filter(F.col("rank") <= k)
+                     score.alias("rrf_score")),
+        "query_id", "doc_id", k, "rrf_score",
     )
 
 
@@ -1150,31 +982,20 @@ def hard_negatives_topk(
     through IVF cells. Returns (anchor_id, negative_id, cos_sim, rank);
     ties broken by lowest candidate id.
     """
-    q = anchors.select(
-        F.col(id_col).alias("anchor_id"), F.col(vec_col).alias("qv")
+    q = _side(anchors, id_col, vec_col, "anchor_id", "qv")
+    c = _side(_spread(corpus), id_col, vec_col, "negative_id", "cv")
+    return _band_topk(q.crossJoin(c), band_lo, band_hi, n)
+
+
+def _band_topk(pairs: DataFrame, band_lo: float, band_hi: float,
+               n: int) -> DataFrame:
+    """(anchor_id, negative_id, cos_sim, rank): the ``n`` most similar
+    in-band candidates per anchor; the band filter runs before the rank,
+    so the window sorts only in-band rows."""
+    scored = _score(pairs, "anchor_id", "negative_id").filter(
+        (F.col("cos_sim") >= band_lo) & (F.col("cos_sim") < band_hi)
     )
-    c = _spread(corpus).select(
-        F.col(id_col).alias("negative_id"), F.col(vec_col).alias("cv")
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("anchor_id") != F.col("negative_id"))
-        .select(
-            "anchor_id",
-            "negative_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-        .filter(
-            (F.col("cos_sim") >= band_lo) & (F.col("cos_sim") < band_hi)
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_sim"), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= n)
-    )
+    return _topk(scored, "anchor_id", "negative_id", n)
 
 
 def hard_negatives_topk_ivf(
@@ -1211,45 +1032,12 @@ def hard_negatives_topk_ivf(
     filter prunes before the per-anchor rank window. Returns
     (anchor_id, negative_id, cos_sim, rank).
     """
-    cents = corpus.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("centv")
+    pairs = _ivf_pairs(
+        (anchors, "anchor_id", "qv"), (_spread(corpus), "negative_id", "cv"),
+        _seed_cells(corpus, id_col, vec_col, n_cells), nprobe,
+        (id_col, vec_col),
     )
-
-    def assign(df: DataFrame, idal: str, val: str, probes: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            F.col(id_col).alias(idal),
-            F.col(vec_col).alias(val),
-            "cell",
-            cosine(F.col(vec_col), F.col("centv")).alias("_cs"),
-        )
-        w = Window.partitionBy(idal).orderBy(F.desc("_cs"), F.col("cell"))
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= probes)
-            .drop("_cs", "_rk")
-        )
-
-    posting = assign(_spread(corpus), "negative_id", "cv", probes=1)
-    acells = assign(anchors, "anchor_id", "qv", probes=nprobe)
-    scored = (
-        acells.join(posting, on="cell")
-        .filter(F.col("anchor_id") != F.col("negative_id"))
-        .select(
-            "anchor_id",
-            "negative_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-        .filter(
-            (F.col("cos_sim") >= band_lo) & (F.col("cos_sim") < band_hi)
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_sim"), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= n)
-    )
+    return _band_topk(pairs, band_lo, band_hi, n)
 
 
 def tfidf_cosine_pairs(

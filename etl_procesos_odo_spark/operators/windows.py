@@ -91,13 +91,21 @@ def top_n_per_group(
     partition_cols: Sequence[str],
     order_cols: Sequence[Column],
     n: int,
+    rank_col: str | None = None,
 ) -> DataFrame:
-    """W4 (grouped variant) — top-N within each group via row_number."""
+    """W4 (grouped variant) — top-N within each group via row_number.
+
+    With ``rank_col`` the row number is kept as a long column of that name
+    (1 = first); without it the row number is dropped."""
     w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
+    if rank_col is not None:
+        return df.withColumn(
+            rank_col, F.row_number().over(w).cast("long")
+        ).filter(F.col(rank_col) <= n)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
-        .drop("_rn")
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= n)
+        .drop("_rk")
     )
 
 

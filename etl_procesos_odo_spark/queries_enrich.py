@@ -1080,7 +1080,7 @@ def _kmeans_train_oracle(n_cells: int = 8, rounds: int = 3) -> str:
     "rounds from the deterministic seed centroids — assignment broadcasts "
     "8 centroids per round, the centroid update shuffles (cell, "
     "component) keys, and each round's (tiny) centroid frame is "
-    "localCheckpoint-truncated so the plan stays flat (the CC-loop "
+    "materialize-truncated so the plan stays flat (the CC-loop "
     "rationale). Fixed round count, not a convergence test: "
     "deterministic, and the oracle unrolls the identical rounds as "
     "chained CTEs from the same constants. Integer micro-unit means "

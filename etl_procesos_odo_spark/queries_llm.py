@@ -233,7 +233,7 @@ _CLUSTER_FINAL = """
     "pair graph (q32), each doc labeled with the min doc_id in its "
     "component; doc_id == cluster_id marks the representative to keep. "
     "Spark side is iterative min-label propagation over only the nodes in "
-    "the pair graph (O(diameter) rounds, localCheckpoint-truncated "
+    "the pair graph (O(diameter) rounds, materialize-truncated "
     "lineage); oracle is a recursive min-reachability CTE.",
 )
 def q47_dedup_clusters(spark: SparkSession, sf_dir: str):
@@ -2635,7 +2635,7 @@ def _pagerank_oracle(
     "its duplicate cluster (a canonical-pick input beyond q108's "
     "per-doc quality argmax). Per round: one shuffle on src for the "
     "contribution join, one partial-agg shuffle on dst, rank frame "
-    "localCheckpoint-truncated (q111's loop discipline); in-neighbor "
+    "materialize-truncated (q111's loop discipline); in-neighbor "
     "sums aggregate as exact femto-unit integers so the double ranks are "
     "bit-stable across partitionings and engines; the oracle unrolls "
     "the identical rounds as chained CTEs. Dangling-mass handling is "

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 
@@ -37,6 +38,24 @@ def _env_flag(name: str) -> bool:
     )
 
 
+_BYTE_SIZE = re.compile(r"\d+(?:[kmgtp]?b|[kmgtp])?")
+
+
+def _env_byte_size(name: str) -> str:
+    """Spark byte-size env knob: unset/empty is ``0``; otherwise digits
+    with an optional ``b/k/kb/m/mb/g/gb/t/tb/p/pb`` unit in any case.
+    Anything else raises ``ValueError`` naming the variable — Spark would
+    not reject it up front (``abc`` hung the first shuffle join)."""
+    raw = os.environ.get(name, "")
+    value = raw.strip().lower() or "0"
+    if not _BYTE_SIZE.fullmatch(value):
+        raise ValueError(
+            f"{name}={raw!r} is not a byte size: use digits with an "
+            "optional b/k/kb/m/mb/g/gb/t/tb/p/pb unit, e.g. 64m"
+        )
+    return value
+
+
 def get_spark(
     app_name: str = "etl-procesos-odo-spark",
     master: str | None = None,
@@ -51,6 +70,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     prefer_smj = _env_flag("SPARK_GRAFT_PREFER_SMJ")  # raises on a typo
+    shj_threshold = _env_byte_size("SPARK_GRAFT_SHJ_AQE_THRESHOLD")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -96,7 +116,7 @@ def get_spark(
         # behavior and the r13 A/B baseline.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_AQE_THRESHOLD", "0"),
+            shj_threshold,
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -107,7 +127,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # long-session hygiene: the correctness harness runs the whole
-        # 67-query registry in one JVM — reclaim shuffle files, broadcast
+        # 203-query registry in one JVM — reclaim shuffle files, broadcast
         # blocks and localCheckpoint RDDs promptly instead of at the default
         # 30-min ContextCleaner GC tick
         .config("spark.cleaner.periodicGC.interval", "2min")

@@ -8,13 +8,17 @@ Usage:
 Writes plans/<round>/<query>_<tag>.txt plus a one-line-per-query summary
 (plans/<round>/_summary_<tag>.tsv) with Exchange count, join strategies,
 Python-eval nodes, and scan PushedFilters presence — the plan-shape
-metrics the optimization guide (§1, §7.2) says to track.
+metrics the optimization guide (§1, §7.2) says to track — and a digest
+of the whole plan text with its session counters stripped (expression
+ids such as ``#12``, ``plan_id=34``), so two captures, even of different
+query subsets, can be diffed per query.
 
 Streaming-backed queries (plans built by executing a streaming job) can't
 be explained without running them; they are recorded as STREAMING-SKIP.
 """
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -57,7 +61,7 @@ def main() -> None:
             except Exception:
                 pass
     with open(os.path.join(outdir, f"_summary_{tag}.tsv"), "w") as fh:
-        fh.write("query\texchanges\tsmj\tbhj\tshj\tbnlj\tcartesian\tpyeval\tpushedfilters\n")
+        fh.write("query\texchanges\tsmj\tbhj\tshj\tbnlj\tcartesian\tpyeval\tpushedfilters\tdigest\n")
         for name, s in rows:
             fh.write(name + "\t" + "\t".join(str(x) for x in s) + "\n")
     print(f"captured {len(rows)} plans -> {outdir} (tag={tag})")
@@ -74,7 +78,21 @@ def summarize(plan: str):
         re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan)
     )
     pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
-    return ex, smj, bhj, shj, bnlj, cart, pyeval, pushed
+    return ex, smj, bhj, shj, bnlj, cart, pyeval, pushed, plan_digest(plan)
+
+
+# per-JVM counters in the plan text: expression ids, exchange plan ids,
+# checkpoint RDD ids and lambda-variable suffixes (``lambda x_190``) all
+# depend on what ran earlier in the session, not on the plan itself
+_SESSION_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+")
+_LAMBDA_VAR = re.compile(r"(lambda [A-Za-z]\w*?)_\d+\b")
+
+
+def plan_digest(plan: str) -> str:
+    """Hash of the plan text with the session counters stripped, so equal
+    digests mean the same operators over the same expressions."""
+    norm = _LAMBDA_VAR.sub(r"\1", _SESSION_IDS.sub("", plan))
+    return hashlib.sha1(norm.encode()).hexdigest()[:12]
 
 
 if __name__ == "__main__":

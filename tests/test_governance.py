@@ -255,6 +255,27 @@ def test_kmeans_train_round3_differs_from_seed_somewhere(spark):
     assert any(r["cell_init"] != r["cell_final"] for r in out)
 
 
+def test_kmeans_lloyd_step_is_one_training_round(spark):
+    """kmeans_lloyd_step and kmeans_train run the same Lloyd loop: one
+    step must equal one training round row for row (seed cell, refined
+    cell and the cosine to the refined centroid), although the step
+    checkpoints its seed assignment and training its centroids."""
+    from etl_procesos_odo_spark.llm.similarity import (
+        kmeans_lloyd_step,
+        kmeans_train,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    step = sorted(
+        tuple(r) for r in kmeans_lloyd_step(emb, n_cells=4).collect()
+    )
+    train = sorted(
+        tuple(r) for r in kmeans_train(emb, n_cells=4, rounds=1).collect()
+    )
+    assert len(step) == emb.count()
+    assert step == train
+
+
 # ---------------------------------------------------------------------------
 # property-based: the MG kernel guarantee under random streams/splits
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 """session.py policies: the single materialisation call site, the
-cluster form of the streaming export, and boolean env-knob parsing."""
+cluster form of the streaming export, and env-knob parsing (boolean and
+byte-size knobs)."""
 
 from __future__ import annotations
 
@@ -74,3 +75,35 @@ def test_env_flag_known_spellings(monkeypatch, value, expected):
 
     monkeypatch.setenv("SPARK_GRAFT_PREFER_SMJ", value)
     assert _env_flag("SPARK_GRAFT_PREFER_SMJ") is expected
+
+
+@pytest.mark.parametrize("value", ["abc", "64 megabytes", "-1", "1.5g", "64mib", "m"])
+def test_shj_aqe_threshold_rejects_non_byte_sizes(monkeypatch, value):
+    """A malformed SPARK_GRAFT_SHJ_AQE_THRESHOLD must fail loudly before
+    any session is built: Spark accepts the string and then hangs the
+    first shuffle join on it."""
+    from etl_procesos_odo_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_SHJ_AQE_THRESHOLD", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHJ_AQE_THRESHOLD"):
+        get_spark("shj-threshold-typo")
+
+
+@pytest.mark.parametrize(
+    "value,expected",
+    [("", "0"), ("0", "0"), (" 64m ", "64m"), ("64MB", "64mb"),
+     ("1024", "1024"), ("512b", "512b"), ("2G", "2g"), ("1tb", "1tb"),
+     ("3Pb", "3pb"), ("8k", "8k")],
+)
+def test_env_byte_size_known_spellings(monkeypatch, value, expected):
+    from etl_procesos_odo_spark.session import _env_byte_size
+
+    monkeypatch.setenv("SPARK_GRAFT_SHJ_AQE_THRESHOLD", value)
+    assert _env_byte_size("SPARK_GRAFT_SHJ_AQE_THRESHOLD") == expected
+
+
+def test_env_byte_size_unset_is_zero(monkeypatch):
+    from etl_procesos_odo_spark.session import _env_byte_size
+
+    monkeypatch.delenv("SPARK_GRAFT_SHJ_AQE_THRESHOLD", raising=False)
+    assert _env_byte_size("SPARK_GRAFT_SHJ_AQE_THRESHOLD") == "0"
