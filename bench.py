@@ -72,193 +72,6 @@ def get_spark(app_name: str):
     return _get_spark(app_name)
 
 
-def skew_join_bench(spark, sf_dir: str) -> dict[str, float]:
-    """Evidence for the salted-join scale claim (operators/joins.py): a
-    deliberately skewed big side (~95% of rows on one hot key, inflated
-    10×) equi-joined against a 1000-row dim with broadcast disabled (the
-    big-big scenario salting exists for). Three measurements:
-
-    - unsalted, AQE skew-split off  → the straggler worst case;
-    - unsalted, AQE skew-split on   → what the runtime rescues for free;
-    - salted (n_salt=32)            → the manual guard, hot key spread
-                                      across 32 reducers.
-
-    Reported under "extras" so the registry total stays comparable
-    across rounds.
-    """
-    from pyspark.sql import functions as F
-
-    from etl_procesos_odo_spark.operators.joins import salted_join
-
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select(
-            F.when(F.col("l_orderkey") % 20 != 0, F.lit(1).cast("long"))
-            .otherwise(F.pmod(F.col("l_orderkey"), F.lit(1000)))
-            .alias("k"),
-            F.col("l_orderkey").alias("rk"),
-            "l_quantity",
-        )
-        .withColumn("_i", F.explode(F.sequence(F.lit(1), F.lit(10))))
-    )
-    dim = spark.range(1000).select(
-        F.col("id").alias("dk"), (F.col("id") * 2).alias("payload")
-    )
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold":
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-        "spark.sql.adaptive.skewJoin.enabled":
-            spark.conf.get("spark.sql.adaptive.skewJoin.enabled"),
-    }
-    res: dict[str, float] = {}
-
-    def run(tag: str, df) -> None:
-        t0 = time.perf_counter()
-        df.write.mode("overwrite").format("noop").save()
-        res[tag] = round(time.perf_counter() - t0, 3)
-
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        unsalted = li.join(dim, li["k"] == dim["dk"], "inner")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        run("skew_join_unsalted_noaqe_sec", unsalted)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        run("skew_join_unsalted_aqe_sec", unsalted)
-        run(
-            "skew_join_salted_sec",
-            salted_join(li, dim, "k", "dk", "rk", n_salt=32),
-        )
-    except Exception as exc:
-        print(f"BENCH ERROR skew_join: {exc}", file=sys.stderr)
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
-    return res
-
-
-def hybrid_routing_bench(spark, sf_dir: str) -> dict[str, float]:
-    """Evidence for the q119/q120 routing claim: the hybrid retrieval
-    LEXICAL arm at a 128-query panel, scan (panel x corpus Jaccard
-    nested loop) vs LSH-banded candidates — the arm where routing pays.
-    Warm best-of-2 each; at the default 8-query panel both arms are
-    trivially cheap, so the registry per-query numbers can't show the
-    routing win (the fused q112/q119/q120 share the bounded vec arm)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from etl_procesos_odo_spark.llm.dedup import (
-        base_hashes, jaccard, lsh_bands, minhash_signature, shingles,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sc = spark.sparkContext
-    sh = (
-        docs.select(F.col("doc_id"), shingles(F.col("text"), 3).alias("sh"))
-        .repartition(sc.defaultParallelism, F.col("doc_id"))
-        .localCheckpoint(eager=True)
-        .filter(F.size("sh") > 0)
-    )
-    nq = 128
-    qsh = sh.filter(F.col("doc_id") < nq).select(
-        F.col("doc_id").alias("query_id"), F.col("sh").alias("qsh")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("jac"), F.col("doc_id"))
-
-    def scan_arm():
-        return (
-            qsh.crossJoin(sh)
-            .filter(F.col("query_id") != F.col("doc_id"))
-            .select("query_id", "doc_id",
-                    jaccard(F.col("qsh"), F.col("sh")).alias("jac"))
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= 20)
-        )
-
-    def lsh_arm():
-        signed = sh.withColumn("_b", base_hashes(F.col("sh"))).select(
-            "doc_id", *minhash_signature(F.col("_b"), 12)
-        )
-        banded = lsh_bands(signed, "doc_id", 12, 4)
-        qb = banded.filter(F.col("doc_id") < nq).select(
-            F.col("doc_id").alias("query_id"), "band_idx", "band_hash"
-        )
-        cand = (
-            qb.join(banded, on=["band_idx", "band_hash"])
-            .filter(F.col("query_id") != F.col("doc_id"))
-            .select("query_id", "doc_id")
-            .distinct()
-        )
-        return (
-            cand.join(qsh, on="query_id")
-            .join(sh, on="doc_id")
-            .select("query_id", "doc_id",
-                    jaccard(F.col("qsh"), F.col("sh")).alias("jac"))
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= 20)
-        )
-
-    res: dict[str, float] = {}
-    try:
-        for tag, build in (("lex_arm_scan_128q_sec", scan_arm),
-                           ("lex_arm_lsh_128q_sec", lsh_arm)):
-            build().write.mode("overwrite").format("noop").save()  # warm
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                build().write.mode("overwrite").format("noop").save()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-            res[tag] = round(best, 3)
-    except Exception as exc:
-        print(f"BENCH ERROR hybrid_routing: {exc}", file=sys.stderr)
-    return res
-
-
-def striped_rank_bench(spark) -> dict[str, float]:
-    """Evidence for the partitioner's striped-rank scale claim
-    (operators/partitioner.py:_striped_global_rank): the adversarial
-    one-giant-unit case — 10M distinct keys in a SINGLE unit, where a
-    plain ``row_number() over (partition by unit ...)`` funnels the whole
-    unit through one task (the 10^8-keys-per-unit straggler the striping
-    exists for), vs the striped form (4096 high-bit stripes, parallel
-    local ranks + broadcast prefix offsets). Best-of-2 warm each; the
-    results are bit-identical (property-tested), this measures only the
-    straggler."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from etl_procesos_odo_spark.operators.partitioner import (
-        _striped_global_rank,
-        seeded_order_hash,
-    )
-
-    keys = spark.range(10_000_000).select(
-        F.lit("u0").alias("unit"), F.col("id").alias("k")
-    )
-    striped = _striped_global_rank(
-        keys, "unit", "k", seeded_order_hash(F.col("k"), 42)
-    )
-    w = Window.partitionBy("unit").orderBy(
-        F.xxhash64(F.col("k").cast("string"), F.lit(42)), "k"
-    )
-    plain = keys.withColumn("_rk", F.row_number().over(w))
-    res: dict[str, float] = {}
-    try:
-        for tag, df in (("striped_rank_10m_one_unit_sec", striped),
-                        ("plain_window_rank_10m_one_unit_sec", plain)):
-            df.write.mode("overwrite").format("noop").save()  # warm
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df.write.mode("overwrite").format("noop").save()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-            res[tag] = round(best, 3)
-    except Exception as exc:
-        print(f"BENCH ERROR striped_rank: {exc}", file=sys.stderr)
-    return res
-
-
 def _time_queries(spark, sf_dir: str, names=None, into=None) -> dict[str, float]:
     """Cold-time each registry query (optionally a subset) in registry
     order; -1.0 marks a failure (stderr carries the exception). Pass
@@ -510,13 +323,13 @@ def main() -> None:
     order = [q.name for q in registry()]
     queries = {n: seg_timings[n] for n in order if n in seg_timings}
 
-    # 2) single-session continuity total + extras benches (one JVM) —
-    # resilient since r10: an sf1 heap OOM inside this long-lived JVM
-    # (q154 after ~100 prior queries) used to cascade — ConnectionRefused
-    # on every later query, then an uncaught throw in skew_join_bench's
-    # parquet read — and the completed fresh-JVM segment results were
-    # never published. Each post-segment stage now degrades to an error
-    # note in extras; the segmented per-query numbers always publish.
+    # 2) single-session continuity total (one JVM) — resilient since
+    # r10: an sf1 heap OOM inside this long-lived JVM (q154 after ~100
+    # prior queries) used to cascade into every later stage, and the
+    # completed fresh-JVM segment results were never published. Each
+    # post-segment stage now degrades to an error note in extras; the
+    # segmented per-query numbers always publish. The skew-join and
+    # striped-rank evidence runs on demand: scale_ladder.py --extras.
     extras: dict = {}
     ss: dict[str, float] = {}
     single_session_total = -1.0
@@ -533,32 +346,14 @@ def main() -> None:
         print(f"BENCH ERROR single-session: {exc}", file=sys.stderr)
         extras["single_session_error"] = f"{type(exc).__name__}: {exc}"[:300]
         extras["single_session_completed"] = len(ss)
-        # a single AnalysisException must not cost the extras benches and
-        # the warm triage: re-probe the JVM like the extras loop does
-        # instead of assuming the session died
+        # a single AnalysisException must not cost the warm triage:
+        # re-probe the JVM instead of assuming the session died
         try:
             session_dead = (
                 spark is None or spark.sparkContext._jsc.sc().isStopped()
             )
         except Exception:
             session_dead = True
-    for fn, args in (
-        (skew_join_bench, lambda: (spark, sf_dir)),
-        (hybrid_routing_bench, lambda: (spark, sf_dir)),
-        (striped_rank_bench, lambda: (spark,)),
-    ):
-        if session_dead:
-            extras[f"{fn.__name__}_error"] = "skipped: session dead"
-            continue
-        try:
-            extras.update(fn(*args()))
-        except Exception as exc:
-            print(f"BENCH ERROR {fn.__name__}: {exc}", file=sys.stderr)
-            extras[f"{fn.__name__}_error"] = f"{type(exc).__name__}: {exc}"[:300]
-            try:
-                session_dead = spark.sparkContext._jsc.sc().isStopped()
-            except Exception:
-                session_dead = True
     extras["single_session_total_sec"] = single_session_total
     # host-speed context (r7 finding: the box drifts ±30% run-to-run):
     # a fixed 20M-iteration pure-python loop, measured at the end of the

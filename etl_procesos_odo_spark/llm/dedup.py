@@ -20,6 +20,8 @@ is oracle-checkable bit-for-bit.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -36,8 +38,10 @@ def hash60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, HASH_HEX_CHARS), 16, 10).cast("long")
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-gram shingles of a text column (array<string>).
+def _grams(col: Column | str, k: int, distinct: bool) -> Column:
+    """Word k-grams of a text column (array<string>), distinct or with
+    multiplicity — the one builder under :func:`shingles` and
+    :func:`ngrams_all`.
 
     Guarded for short texts: Spark's ``sequence(0, stop)`` generates a
     *descending* array when stop < 0, so size < k must short-circuit to an
@@ -56,9 +60,30 @@ def shingles(col: Column | str, k: int = 3) -> Column:
         grams = F.zip_with(
             grams, F.slice(w, i + 1, n), lambda a, b: F.concat_ws(" ", a, b)
         )
-    return F.when(F.size(w) >= k, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    return F.when(
+        F.size(w) >= k, F.array_distinct(grams) if distinct else grams
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def shingles(col: Column | str, k: int = 3) -> Column:
+    """Distinct word k-gram shingles of a text column (array<string>)."""
+    return _grams(col, k, distinct=True)
+
+
+def ngrams_all(col: Column | str, k: int = 3) -> Column:
+    """Word k-grams WITH multiplicity (no array_distinct) — the gram
+    stream for occurrence-level duplication stats."""
+    return _grams(col, k, distinct=False)
+
+
+def _digest(text_col: str, norm: bool = True) -> Column:
+    """md5 of the text, whitespace-collapsed, trimmed and lowercased
+    unless ``norm`` is False: the exact-duplicate key (the oracle spells
+    it ``md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))``)."""
+    c = F.col(text_col)
+    if norm:
+        c = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
+    return F.md5(c)
 
 
 def exact_dedup(
@@ -66,11 +91,8 @@ def exact_dedup(
 ) -> DataFrame:
     """Exact dedup: one representative (lowest id) per distinct text digest.
     Returns (digest, keep_id, n_copies)."""
-    c = F.col(text_col)
-    if norm:
-        c = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
     return (
-        df.select(F.md5(c).alias("digest"), F.col(id_col).alias("_id"))
+        df.select(_digest(text_col, norm).alias("digest"), F.col(id_col).alias("_id"))
         .groupBy("digest")
         .agg(F.min("_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
@@ -83,54 +105,37 @@ def exact_dedup(
 MINHASH_P = (1 << 31) - 1
 
 
-
 def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     return [(2 * i + 3, 7919 * (i + 1)) for i in range(num_hashes)]
 
 
-def base_hashes(shingle_col: Column | str) -> Column:
+def base_hashes(shingle_col: str) -> Column:
     """Per-shingle 60-bit md5 hash mod the Mersenne prime — computed ONCE
     per row and materialized as a column, so the per-seed permutations
     below never re-digest (Catalyst does not reliably CSE a repeated
     subexpression across 12 aggregates).
 
-    Pass the column NAME for the fast construction path: a python-lambda
-    ``transform`` costs dozens of py4j round-trips to build, and the
-    signature/band builders stack ~50 of them — ~1 s of pure driver
-    latency per pipeline (measured on q102: 4.7k round-trips, 1.4 s
-    socket wait). The single-``F.expr`` form parses JVM-side in one
-    call; the analyzed expression is identical."""
-    if isinstance(shingle_col, str):
-        return F.expr(
-            f"transform({shingle_col}, s -> CAST(conv(substring(md5(s), 1, "
-            f"{HASH_HEX_CHARS}), 16, 10) AS BIGINT) % {MINHASH_P})"
-        )
-    return F.transform(shingle_col, lambda s: hash60(s) % F.lit(MINHASH_P))
+    Takes the column NAME and builds one ``F.expr``, parsed JVM-side in
+    one call: a python-lambda ``transform`` costs dozens of py4j
+    round-trips to build, and the signature/band builders stack ~50 of
+    them — ~1 s of pure driver latency per pipeline (measured on q102:
+    4.7k round-trips, 1.4 s socket wait)."""
+    return F.expr(
+        f"transform({shingle_col}, s -> CAST(conv(substring(md5(s), 1, "
+        f"{HASH_HEX_CHARS}), 16, 10) AS BIGINT) % {MINHASH_P})"
+    )
 
 
-def minhash_signature(
-    base_col: Column | str, num_hashes: int = 12
-) -> list[Column]:
-    """MinHash signature from a pre-hashed shingle array (``base_hashes``):
-    for each seed i, min over (a_i * h + b_i) % P. Null when empty.
-    Column-name input takes the one-``F.expr``-per-seed fast path (see
-    :func:`base_hashes`); a Column input keeps the builder form."""
-    params = minhash_params(num_hashes)
-    if isinstance(base_col, str):
-        return [
-            F.expr(
-                f"array_min(transform({base_col}, "
-                f"h -> (h * {a} + {b}) % {MINHASH_P}))"
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-
-    def perm(a: int, b: int):
-        return lambda h: (h * a + b) % F.lit(MINHASH_P)
-
+def minhash_signature(base_col: str, num_hashes: int = 12) -> list[Column]:
+    """MinHash signature from a pre-hashed shingle array column
+    (``base_hashes``): for each seed i, min over (a_i * h + b_i) % P, one
+    ``F.expr`` per seed. Null when empty."""
     return [
-        F.array_min(F.transform(base_col, perm(a, b))).alias(f"mh{i}")
-        for i, (a, b) in enumerate(params)
+        F.expr(
+            f"array_min(transform({base_col}, "
+            f"h -> (h * {a} + {b}) % {MINHASH_P}))"
+        ).alias(f"mh{i}")
+        for i, (a, b) in enumerate(minhash_params(num_hashes))
     ]
 
 
@@ -175,6 +180,82 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / union
 
 
+def _shingle_frame(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(_id, _sh) rows of every document with at least one shingle.
+
+    Materialised, because the frame feeds signing AND both sides of the
+    verify join, so tokenize+shingle runs once, not three times. The
+    empty-shingle filter goes ABOVE the barrier: a filter on the
+    projection itself gets predicate-pushed below the _spread exchange,
+    re-evaluating the whole shingle expression single-threaded in the
+    scan task (measured 2.5 s of q47's 6 s at sf0.1)."""
+    return materialize(
+        _spread(df).select(
+            F.col(id_col).alias("_id"), shingles(F.col(text_col), k).alias("_sh")
+        )
+    ).filter(F.size("_sh") > 0)
+
+
+def _band_rows(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """The signer: (_id, _sh) shingle rows -> base hashes -> MinHash
+    signature -> (_id, band_idx, band_hash) band rows."""
+    signed = sh.withColumn("_base", base_hashes("_sh")).select(
+        "_id", *minhash_signature("_base", num_hashes)
+    )
+    return lsh_bands(signed, "_id", num_hashes, bands)
+
+
+def _bucket_pairs(
+    x: DataFrame, y: DataFrame, pair: Column | None, out: list[Column]
+) -> DataFrame:
+    """Distinct ``out`` rows over the band rows of ``x`` and ``y`` (aliased
+    "x" and "y") that share a (band_idx, band_hash) bucket and satisfy
+    ``pair``. Only the bucket keys shuffle, and each bucket is small by
+    construction, so the join is skew-safe."""
+    on = [F.col(f"x.{c}") == F.col(f"y.{c}") for c in ("band_idx", "band_hash")]
+    if pair is not None:
+        on.append(pair)
+    return x.alias("x").join(y.alias("y"), on=on).select(*out).distinct()
+
+
+def _lsh_join(
+    xs: DataFrame,
+    ys: DataFrame,
+    ids: tuple[str, str],
+    out: str,
+    num_hashes: int,
+    bands: int,
+    pair: Column | None = None,
+    threshold: float | None = None,
+    y_cap: int | None = None,
+) -> DataFrame:
+    """MinHash-LSH candidates verified by exact Jaccard, for two (_id, _sh)
+    shingle frames: (a, b, out) for every x/y pair that shares a band
+    bucket and satisfies ``pair`` (over ``x._id``/``y._id``), ``out`` the
+    exact Jaccard, kept at ``>= threshold`` when one is given. ``y_cap``
+    keeps only the lowest ids per y-side bucket (:func:`band_min_k`).
+
+    The band frames are NOT checkpointed (r13, measured): the two sides
+    of a self-join are identical subtrees, so ReuseExchange computes the
+    sign+band exchange once; a checkpoint barrier there only added
+    RDD-copy cost and regressed the whole LSH family at sf0.1 (subset
+    A/B +13.7 s: q64 +3.1, q108 +1.9, q47 +1.3)."""
+    a, b = ids
+    xb = _band_rows(xs, num_hashes, bands)
+    yb = xb if ys is xs else _band_rows(ys, num_hashes, bands)
+    if y_cap is not None:
+        yb = band_min_k(yb, y_cap)
+    cand = _bucket_pairs(
+        xb, yb, pair, [F.col("x._id").alias(a), F.col("y._id").alias(b)]
+    )
+    scored = (
+        cand.join(xs.select(F.col("_id").alias(a), F.col("_sh").alias("_sa")), a)
+        .join(ys.select(F.col("_id").alias(b), F.col("_sh").alias("_sb")), b)
+        .select(a, b, jaccard(F.col("_sa"), F.col("_sb")).alias(out))
+    )
+    return scored if threshold is None else scored.filter(F.col(out) >= threshold)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -187,56 +268,10 @@ def minhash_lsh_pairs(
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band → bucket
     self-join → exact-Jaccard verify ≥ threshold.
     Returns (id_a, id_b, jaccard_sim), id_a < id_b, one row per pair."""
-    sh = materialize(
-        # the shingle frame feeds signing AND both sides of the verify join —
-        # materialise it so tokenize+shingle runs once, not three times.
-        # The empty-shingle filter goes ABOVE the barrier: a filter on the
-        # projection itself gets predicate-pushed below the _spread
-        # exchange, re-evaluating the whole shingle expression
-        # single-threaded in the scan task (measured 2.5 s of q47's 6 s at
-        # sf0.1); the barrier pins it to the cheap materialised array.
-        _spread(df).select(
-            F.col(id_col).alias("_id"), shingles(F.col(text_col), k).alias("_sh")
-        )
-    ).filter(F.size("_sh") > 0)
-    hashed = sh.withColumn("_base", base_hashes("_sh"))
-    signed = hashed.select(
-        "_id", *minhash_signature("_base", num_hashes)
-    )
-    # NOT checkpointed (r13, measured): the two sides of the bucket
-    # self-join are identical subtrees, so ReuseExchange computes the
-    # sign+band exchange once (q32's plan shows one shared Exchange id);
-    # a localCheckpoint barrier here only added RDD-copy cost and
-    # regressed the whole LSH family at sf0.1 (subset A/B +13.7 s:
-    # q64 +3.1, q108 +1.9, q47 +1.3 — same failure mode as the
-    # kmeans_train v-checkpoint).
-    banded = lsh_bands(signed, "_id", num_hashes, bands)
-    cand = (
-        banded.alias("x")
-        .join(
-            banded.alias("y"),
-            on=[
-                F.col("x.band_idx") == F.col("y.band_idx"),
-                F.col("x.band_hash") == F.col("y.band_hash"),
-                F.col("x._id") < F.col("y._id"),
-            ],
-        )
-        .select(
-            F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b")
-        )
-        .distinct()
-    )
-    a = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    b = sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
+    sh = _shingle_frame(df, text_col, id_col, k)
+    return _lsh_join(
+        sh, sh, ("id_a", "id_b"), "jaccard_sim", num_hashes, bands,
+        pair=F.col("x._id") < F.col("y._id"), threshold=threshold,
     )
 
 
@@ -262,14 +297,13 @@ def minhash_lsh_pairs_collapsed(
     lowest doc id. Composition: exact digest groupBy (uniform keys, one
     shuffle) → the q32 LSH pipeline over representatives only.
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     # reps feeds the LSH input AND both weight sides (sa, sb) — column
     # pruning gives each consumer a DIFFERENT aggregate list, so
     # ReuseExchange cannot dedup them and the corpus digest groupBy ran
     # three times (r13: 9 parquet scans in q67's plan, 0 reuse). One
     # lazy checkpoint = one scan + one digest shuffle.
     reps = materialize(
-        df.groupBy(F.md5(norm).alias("_digest")).agg(
+        df.groupBy(_digest(text_col).alias("_digest")).agg(
             F.min(id_col).alias(id_col),
             # representative's raw text (min-id row) — deterministic, and
             # both engines shingle the same raw string
@@ -366,10 +400,16 @@ def dedup_clusters(
         if new_sum == lab_sum:
             break
         lab_sum = new_sum
+    return _label_docs(df, id_col, lab)
+
+
+def _label_docs(df: DataFrame, id_col: str, lab: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every distinct doc id of ``df``, from the
+    (id, cluster_id) labels of the pair-graph nodes; a doc outside the
+    graph is its own cluster. Distinct, like the oracle's GROUP BY:
+    duplicate primary-key rows must not duplicate the cluster labeling
+    (r10 adversarial census pin)."""
     out_id = F.col(id_col).alias("doc_id") if id_col != "doc_id" else F.col(id_col)
-    # distinct: one output row per distinct doc id, like the oracle's
-    # GROUP BY — duplicate primary-key rows must not duplicate the
-    # cluster labeling (r10 adversarial census pin)
     return (
         df.select(out_id).distinct()
         .join(lab, F.col("doc_id") == lab["id"], "left")
@@ -482,15 +522,7 @@ def dedup_clusters_bigstar(
         threshold=threshold,
     )
     lab = cc_bigstar(pairs.select("id_a", "id_b"), max_iter=max_iter)
-    out_id = F.col(id_col).alias("doc_id") if id_col != "doc_id" else F.col(id_col)
-    # distinct: one output row per distinct doc id, like the oracle's
-    # GROUP BY — duplicate primary-key rows must not duplicate the
-    # cluster labeling (r10 adversarial census pin)
-    return (
-        df.select(out_id).distinct()
-        .join(lab, F.col("doc_id") == lab["id"], "left")
-        .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
-    )
+    return _label_docs(df, id_col, lab)
 
 
 def simhash_neardup_pairs(
@@ -520,31 +552,23 @@ def simhash_neardup_pairs(
     keys = F.expr(
         "array("
         + ", ".join(
-            f"named_struct('b', {i}, 'bv', shiftright(simhash, {i * width}) & {mask})"
+            f"named_struct('band_idx', {i}, "
+            f"'band_hash', shiftright(simhash, {i * width}) & {mask})"
             for i in range(bands)
         )
         + ")"
     )
     banded = sig.select(
         F.col(id_col).alias("_id"), "simhash", F.explode(keys).alias("k")
-    ).select("_id", "simhash", "k.b", "k.bv")
-    cand = (
-        banded.alias("x")
-        .join(
-            banded.alias("y"),
-            on=[
-                F.col("x.b") == F.col("y.b"),
-                F.col("x.bv") == F.col("y.bv"),
-                F.col("x._id") < F.col("y._id"),
-            ],
-        )
-        .select(
+    ).select("_id", "simhash", "k.band_idx", "k.band_hash")
+    cand = _bucket_pairs(
+        banded, banded, F.col("x._id") < F.col("y._id"),
+        [
             F.col("x._id").alias("id_a"),
             F.col("x.simhash").alias("sa"),
             F.col("y._id").alias("id_b"),
             F.col("y.simhash").alias("sb"),
-        )
-        .distinct()
+        ],
     )
     ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("long")
     return (
@@ -598,37 +622,57 @@ def decontaminate(
     # _spread BEFORE side(): the exchange must precede the shingle
     # explode, or the expensive expression still runs in the scan task
     e = materialize(side(_spread(train), "t").union(side(_spread(bench), "b")))
-    if isinstance(max_df, float):
-        import math
 
-        if not 0 < max_df < 1:
-            raise ValueError("fractional max_df must be in (0, 1)")
-        # ONE column-pruned count job over both inputs (not two separate
-        # eager train.count() + bench.count() scans) — the denominator is
-        # the documented |train| + |bench|, exactly the same formula as
-        # decontaminate_bloom.bench_max_df and tfidf_cosine_pairs.max_df,
-        # so one fractional setting stays cap-equivalent across all three
-        # surfaces even when some docs are too short to yield a shingle.
-        n_docs = (
+    def n_docs() -> int:
+        # |train| + |bench| in ONE column-pruned count job, counting the
+        # docs too short to yield a shingle
+        return (
             train.select(F.col(id_col).alias("_i"))
             .unionAll(bench.select(F.col(id_col).alias("_i")))
             .count()
         )
-        max_df = max(1, math.floor(max_df * n_docs))
-    if max_df is not None:
-        keep = (
-            e.groupBy("g")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_df)
-            .select("g")
-        )
-        e = e.join(keep, "g")
+
+    e = _df_capped(e, _frac_cap(max_df, "max_df", n_docs))
     t = e.filter(F.col("_side") == "t").select(F.col("_id").alias("doc_id"), "g")
     b = e.filter(F.col("_side") == "b").select(F.col("_id").alias("b_id"), "g")
+    return _rollup(t.join(b, "g"), min_shared)
+
+
+def _frac_cap(cap, name: str, n_docs) -> int | None:
+    """A document-frequency cap: an int (or None) is absolute; a float in
+    (0, 1) is a fraction of the ``n_docs()`` count,
+    ``max(1, floor(frac · N))``, so one setting survives corpus growth.
+    The decontamination caps and ``tfidf_cosine_pairs.max_df`` share it."""
+    if not isinstance(cap, float):
+        return cap
+    if not 0 < cap < 1:
+        raise ValueError(f"fractional {name} must be in (0, 1)")
+    return max(1, math.floor(cap * n_docs()))
+
+
+def _df_capped(g: DataFrame, max_df: int | None) -> DataFrame:
+    """``g`` without the rows whose gram ``g`` occurs in more than
+    ``max_df`` rows (one per document and distinct gram)."""
+    if max_df is None:
+        return g
+    keep = (
+        g.groupBy("g")
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") <= max_df)
+        .select("g")
+    )
+    return g.join(keep, "g")
+
+
+def _rollup(
+    matches: DataFrame, min_shared: int, n: Column | None = None
+) -> DataFrame:
+    """Shared-shingle matches (doc_id, b_id) -> per-pair counts ``n``
+    (default: one per row) kept at ``>= min_shared`` -> (doc_id,
+    n_bench_docs, n_shared_shingles, max_shared) per contaminated doc."""
     pair = (
-        t.join(b, "g")
-        .groupBy("doc_id", "b_id")
-        .agg(F.count("*").alias("n_shared"))
+        matches.groupBy("doc_id", "b_id")
+        .agg((F.count("*") if n is None else n).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
     return pair.groupBy("doc_id").agg(
@@ -636,6 +680,25 @@ def decontaminate(
         F.sum("n_shared").alias("n_shared_shingles"),
         F.max("n_shared").alias("max_shared"),
     )
+
+
+def _bench_grams(
+    bench: DataFrame, text_col: str, id_col: str, k: int, max_df: int | None,
+    bloom: tuple[int, int] | None,
+) -> tuple[DataFrame, list[int] | None]:
+    """The bench side of a bloom-join decontamination: its (b_id, g)
+    shingle rows without grams above the bench-side ``max_df``,
+    materialised, plus the bloom bitmap of their distinct grams when
+    ``bloom`` = (m_bits, n_hashes) is given."""
+    b = _spread(bench).select(
+        F.col(id_col).alias("b_id"),
+        F.explode(shingles(F.col(text_col), k)).alias("g"),
+    )
+    b = materialize(_df_capped(b, max_df))
+    bits = None
+    if bloom is not None:
+        bits = bloom_bitmap_bits(b.select("g").distinct(), "g", *bloom)
+    return b, bits
 
 
 # Bloom-join prefilter defaults: m sized for an eval-suite-scale bench
@@ -668,8 +731,6 @@ def bloom_params(
     this derivation, not an assertion: ``bloom_params(2*10**5, 0.01)``
     → m rounds to 2^21 bits (256 KB) and optimal k≈7 caps to 3, with
     :func:`bloom_fpp` ≈ 1.6% as documented above."""
-    import math
-
     if n_keys < 1:
         return 64, 1
     if not 0 < target_fpp < 1:
@@ -686,8 +747,6 @@ def bloom_fpp(n_keys: int, m_bits: int, n_hashes: int) -> float:
     """Expected false-positive rate ``(1 - e^(-k·n/m))^k`` of an
     (m, k) bloom filter holding n keys — the planning complement to
     :func:`bloom_params` when k is capped below optimal."""
-    import math
-
     return (1.0 - math.exp(-n_hashes * n_keys / m_bits)) ** n_hashes
 
 
@@ -821,48 +880,23 @@ def decontaminate_bloom(
     plan-internally for eligible shuffle joins — this operator makes it
     an explicit, tunable stage for the decontamination pipeline.
     """
-    if isinstance(bench_max_df, float):
-        import math
-
-        if not 0 < bench_max_df < 1:
-            raise ValueError("fractional bench_max_df must be in (0, 1)")
-        bench_max_df = max(1, math.floor(bench_max_df * bench.count()))
-    b = _spread(bench).select(
-        F.col(id_col).alias("b_id"),
-        F.explode(shingles(F.col(text_col), k)).alias("g"),
+    b, bits = _bench_grams(
+        bench, text_col, id_col, k,
+        _frac_cap(bench_max_df, "bench_max_df", bench.count),
+        (m_bits, n_hashes) if prefilter else None,
     )
-    if bench_max_df is not None:
-        keep = (
-            b.groupBy("g")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= bench_max_df)
-            .select("g")
-        )
-        b = b.join(keep, "g")
-    b = materialize(b)
     t = _spread(train).select(
         F.col(id_col).alias("doc_id"),
         F.explode(shingles(F.col(text_col), k)).alias("g"),
     )
     if prefilter:
-        bits = bloom_bitmap_bits(b.select("g").distinct(), "g", m_bits, n_hashes)
         t = t.filter(bloom_probe_filter(F.col("g"), bits, m_bits, n_hashes))
     # make b the build side explicitly: the materialised b carries the
     # planner's join-size estimate (a product of its inputs), not its
     # real size, so without the hint the planner could broadcast the
     # corpus-scale train side. A shuffled hash build, not a broadcast:
     # b grows with the bench set, which need not fit on one node.
-    pair = (
-        t.join(b.hint("shuffle_hash"), "g")
-        .groupBy("doc_id", "b_id")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    return pair.groupBy("doc_id").agg(
-        F.count("*").alias("n_bench_docs"),
-        F.sum("n_shared").alias("n_shared_shingles"),
-        F.max("n_shared").alias("max_shared"),
-    )
+    return _rollup(t.join(b.hint("shuffle_hash"), "g"), min_shared)
 
 
 def simhash60(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1080,10 +1114,8 @@ def incremental_dedup(
     threshold among LSH candidates; digest non-match), or 'unique'
     (jaccard_sim null, match_id null).
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-
     def digests(df: DataFrame, out: str) -> DataFrame:
-        return df.select(F.col(id_col).alias(out), F.md5(norm).alias("_dg"))
+        return df.select(F.col(id_col).alias(out), _digest(text_col).alias("_dg"))
 
     exact = (
         digests(new_batch, "new_id")
@@ -1095,53 +1127,15 @@ def incremental_dedup(
         )
         .select("new_id", "match_id")
     )
-
-    def prepared(df: DataFrame) -> DataFrame:
-        sh = _spread(df).select(
-            F.col(id_col).alias("_id"),
-            shingles(F.col(text_col), k).alias("_sh"),
-        )
-        return materialize(sh).filter(F.size("_sh") > 0)
-
-    sh_new = prepared(new_batch)
-    sh_cor = prepared(corpus)
-
-    def banded(sh: DataFrame) -> DataFrame:
-        signed = sh.withColumn("_base", base_hashes("_sh")).select(
-            "_id", *minhash_signature("_base", num_hashes)
-        )
-        return lsh_bands(signed, "_id", num_hashes, bands)
-
-    corpus_bands = banded(sh_cor)
-    if corpus_band_cap is not None:
-        # bounded-memory min-k (identical result set to the row_number
-        # window form, but hot buckets trim map-side and nothing sorts
-        # the raw band frame — see band_min_k)
-        corpus_bands = band_min_k(corpus_bands, corpus_band_cap)
-
-    cand = (
-        banded(sh_new).alias("n")
-        .join(
-            corpus_bands.alias("c"),
-            on=[
-                F.col("n.band_idx") == F.col("c.band_idx"),
-                F.col("n.band_hash") == F.col("c.band_hash"),
-            ],
-        )
-        .select(
-            F.col("n._id").alias("new_id"), F.col("c._id").alias("cand_id")
-        )
-        .distinct()
-    )
-    scored = (
-        cand.join(sh_new.select(F.col("_id").alias("new_id"), F.col("_sh").alias("sh_n")), "new_id")
-        .join(sh_cor.select(F.col("_id").alias("cand_id"), F.col("_sh").alias("sh_c")), "cand_id")
-        .select(
-            "new_id",
-            "cand_id",
-            jaccard(F.col("sh_n"), F.col("sh_c")).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
+    # the new x capped-corpus band join: no corpus x corpus pairs, and
+    # the bounded-memory min-k cap (identical result set to the
+    # row_number window form, but hot buckets trim map-side and nothing
+    # sorts the raw band frame — see band_min_k)
+    scored = _lsh_join(
+        _shingle_frame(new_batch, text_col, id_col, k),
+        _shingle_frame(corpus, text_col, id_col, k),
+        ("new_id", "cand_id"), "jac", num_hashes, bands,
+        threshold=threshold, y_cap=corpus_band_cap,
     )
     from pyspark.sql import Window
 
@@ -1304,24 +1298,6 @@ def pagerank_rounds(
             .transform(materialize)
         )
     return rank
-
-
-def ngrams_all(col: Column | str, k: int = 3) -> Column:
-    """Word k-grams WITH multiplicity (no array_distinct) — the gram
-    stream for occurrence-level duplication stats. Same guarded
-    chained-zip_with build as :func:`shingles` (one array traversal,
-    stays in codegen)."""
-    c = F.col(col) if isinstance(col, str) else col
-    w = tokens(c)
-    n = F.greatest(F.size(w) - (k - 1), F.lit(0))
-    grams = F.slice(w, 1, n)
-    for i in range(1, k):
-        grams = F.zip_with(
-            grams, F.slice(w, i + 1, n), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.when(F.size(w) >= k, grams).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 def duplicated_gram_stats(

@@ -873,54 +873,24 @@ def hybrid_rrf_topk(
     are the drop-in scale paths); the fusion join keys on panel-sized
     (query, doc) pairs.
     """
-    from .dedup import jaccard, shingles
+    from .dedup import _lsh_join, _shingle_frame, jaccard
 
-    # Spread + materialize the shingle projection BEFORE the pair join:
-    # without the barrier, Catalyst evaluates the whole tokenize/shingle
-    # tree inside the (often single-partition) scan task feeding the
-    # nested-loop join — the q64 lesson; measured 20x on this arm at
-    # sf0.1 (10 s -> 0.5 s). The checkpoint doubles as the pushdown
-    # barrier so the size filter cannot sink below the exchange.
-    sc = docs.sparkSession.sparkContext
-    sh = (
-        docs.select(
-            F.col("doc_id"), shingles(F.col("text"), shingle_k).alias("sh")
-        )
-        .repartition(sc.defaultParallelism, F.col("doc_id"))
-        .transform(materialize)
-        .filter(F.size("sh") > 0)
-    )
-    qsh = sh.filter(F.col("doc_id") < n_queries).select(
-        F.col("doc_id").alias("query_id"), F.col("sh").alias("qsh")
-    )
+    # the shared spread + materialised (_id, _sh) shingle frame: without
+    # the barrier, Catalyst evaluates the whole tokenize/shingle tree
+    # inside the (often single-partition) scan task feeding the pair
+    # join — the q64 lesson; measured 20x on this arm at sf0.1
+    # (10 s -> 0.5 s)
+    sh = _shingle_frame(docs, "text", "doc_id", shingle_k)
+    panel_sh = sh.filter(F.col("_id") < n_queries)
     if lex_route == "lsh":
-        from .dedup import base_hashes, lsh_bands, minhash_signature
-
-        signed = sh.withColumn("_base", base_hashes("sh")).select(
-            "doc_id", *minhash_signature("_base", num_hashes)
-        )
-        banded = lsh_bands(signed, "doc_id", num_hashes, bands)
-        qb = banded.filter(F.col("doc_id") < n_queries).select(
-            F.col("doc_id").alias("query_id"), "band_idx", "band_hash"
-        )
-        cand = (
-            qb.join(banded, on=["band_idx", "band_hash"])
-            .filter(F.col("query_id") != F.col("doc_id"))
-            .select("query_id", "doc_id")
-            .distinct()
-        )
-        lex_scored = (
-            cand.join(qsh, on="query_id")
-            .join(sh, on="doc_id")
-            .select(
-                "query_id",
-                "doc_id",
-                jaccard(F.col("qsh"), F.col("sh")).alias("jac"),
-            )
+        lex_scored = _lsh_join(
+            panel_sh, sh, ("query_id", "doc_id"), "jac", num_hashes, bands,
+            pair=F.col("x._id") != F.col("y._id"),
         )
     elif lex_route == "scan":
         lex_scored = (
-            qsh.crossJoin(sh)
+            panel_sh.select(F.col("_id").alias("query_id"), F.col("_sh").alias("qsh"))
+            .crossJoin(sh.select(F.col("_id").alias("doc_id"), F.col("_sh").alias("sh")))
             .filter(F.col("query_id") != F.col("doc_id"))
             .select(
                 "query_id",
@@ -1103,15 +1073,12 @@ def tfidf_cosine_pairs(
     """
     import math
 
-    from .dedup import ngrams_all
+    from .dedup import _frac_cap, ngrams_all
 
     n_docs = None
     if isinstance(max_df, float) or isinstance(candidate_budget, float):
         n_docs = docs.count()
-    if isinstance(max_df, float):
-        if not 0 < max_df < 1:
-            raise ValueError("fractional max_df must be in (0, 1)")
-        max_df = max(1, math.floor(max_df * n_docs))
+    max_df = _frac_cap(max_df, "max_df", lambda: n_docs)
     g = _spread(docs).select(
         F.col(id_col).alias("_id"),
         F.explode(ngrams_all(F.col(text_col), k)).alias("term"),

@@ -74,7 +74,7 @@ def salted_join(
     ``n_salt`` reducers instead of one straggler task. Dim replication
     costs n_salt× its (small) size — only ever used dim-side.
 
-    **When to salt vs trust AQE** (measured, bench.py skew_join_bench at
+    **When to salt vs trust AQE** (measured, scale_ladder.py skew_join_bench at
     sf1, one key on ~95% of a 10x-inflated lineitem: unsalted with AQE
     skew-split OFF 30.4 s, AQE ON 10.6 s, salted 9.8 s): AQE's
     OptimizeSkewedJoin does the same work as salting — split the

@@ -2496,7 +2496,6 @@ _INC_ROLLUP_ORACLE = """
     "late data folds in without reprocessing its partition.",
 )
 def q172_incremental_rollup(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "event_type",

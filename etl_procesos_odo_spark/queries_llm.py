@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .llm.dedup import (
+    _digest,
     decontaminate,
     decontaminate_bloom,
     dedup_clusters,
@@ -2184,9 +2185,7 @@ def q114_profile_events(spark: SparkSession, sf_dir: str):
 )
 def q115_source_dedup_report(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents")
-    dg = F.md5(
-        F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    )
+    dg = _digest("text")
     return (
         docs.select("source", dg.alias("dg"))
         .groupBy("source")
@@ -3343,7 +3342,6 @@ def _hll_oracle() -> str:
 def q159_hll_cardinality(spark: SparkSession, sf_dir: str):
     from .llm.sketches import hll_cardinality
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return hll_cardinality(
         ev,
@@ -3471,7 +3469,6 @@ def _hll_rollup_oracle() -> str:
 def q164_hll_rollup(spark: SparkSession, sf_dir: str):
     from .llm.sketches import hll_estimate_exprs, hll_register_exprs
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     reg = hll_register_exprs("user_id", p=6, engine="spark")
     est = hll_estimate_exprs(p=6)
     w1 = reg["w_bits"] + 1
@@ -4021,7 +4018,6 @@ def _cms_frequency_plan(spark: SparkSession, sf_dir: str, D: int, W: int):
     fuzz arbiter, which re-derives ``_cms_oracle(D, W)`` per draw)."""
     from .llm.sketches import cms_point_estimates, cms_sketch
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events").filter("user_id is not null")
     e1 = ev.filter("ts < timestamp'2024-01-08'").select("user_id")
     e2 = ev.filter(
@@ -4758,11 +4754,7 @@ _CLUSTER_DIST_ORACLE = """
 )
 def q197_cluster_size_distribution(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        F.md5(
-            F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
-        ).alias("digest")
-    )
+    d = docs.select(_digest("text").alias("digest"))
     cl = d.groupBy("digest").agg(F.count(F.lit(1)).alias("sz"))
     tot = cl.agg(
         F.count(F.lit(1)).alias("n_clusters"),

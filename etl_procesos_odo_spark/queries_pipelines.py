@@ -67,7 +67,6 @@ O_SPANISH_LABEL = (
     "resource ratio. The flagship ``entry()`` query.",
 )
 def callcenter_demand(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = (
         load_table(spark, sf_dir, "events")
         .withColumn("dia", weekday_monday0("ts"))
@@ -130,7 +129,6 @@ def callcenter_demand(spark: SparkSession, sf_dir: str):
     "tests/test_partitioner.py.",
 )
 def q50_partitioner_pipeline(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("O", "F")
         & ~F.upper(F.col("o_orderpriority")).contains("URGENT")
@@ -190,7 +188,6 @@ def q50_partitioner_pipeline(spark: SparkSession, sf_dir: str):
     "message key (F19, :198-201).",
 )
 def q51_confirmaciones_pipeline(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.to_date("o_orderdate").alias("fecha"),
@@ -253,7 +250,6 @@ def q51_confirmaciones_pipeline(spark: SparkSession, sf_dir: str):
     ":411-413). Weights go through DECIMAL so the sum is order-independent.",
 )
 def q52_recursos_pipeline(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     epoch = F.col("ts").cast("double")
     slot_ts = F.timestamp_seconds((F.ceil(epoch / 300) * 300).cast("long"))
@@ -296,7 +292,6 @@ def q52_recursos_pipeline(spark: SparkSession, sf_dir: str):
     ":250-257).",
 )
 def q54_indicadores_pipeline(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
@@ -372,7 +367,6 @@ def q54_indicadores_pipeline(spark: SparkSession, sf_dir: str):
     "with zero-guards (A16, :554-597).",
 )
 def q55_facturacion_pipeline(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     rng = ev.agg(
         F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")

@@ -33,11 +33,6 @@ from .registry import davg, dsum, load_table, o_davg, o_dsum, register
 from .session import materialize
 
 
-def _utc(spark: SparkSession) -> None:
-    """Pin session TZ so timestamp semantics match the (TZ-naive) oracle."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 
 
@@ -65,7 +60,6 @@ EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
     "app_indicadores_modelo_atencion.py:216-247.",
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= "1998-09-02"
     )
@@ -98,7 +92,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str):
     "(app_indicadores_modelo_atencion.py:130-133), P7 null guard.",
 )
 def q02_filter_project(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.filter(
         F.col("event_type").isin("click", "view")
@@ -125,7 +118,6 @@ def q02_filter_project(spark: SparkSession, sf_dir: str):
     "for the join.",
 )
 def q03_dim_join_agg(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
@@ -154,7 +146,6 @@ def q03_dim_join_agg(spark: SparkSession, sf_dir: str):
     "duplication, no shuffle of payload columns.",
 )
 def q04_semi_join(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
@@ -177,7 +168,6 @@ def q04_semi_join(spark: SparkSession, sf_dir: str):
     "app.py:262-269) as left_anti join.",
 )
 def q05_anti_join(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
@@ -211,7 +201,6 @@ def q05_anti_join(spark: SparkSession, sf_dir: str):
     "no collect; the join side is a post-aggregate, so it broadcasts.",
 )
 def q06_date_spine_fill(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     rng = orders.agg(
         F.min(F.to_date("o_orderdate")).alias("d0"),
@@ -243,7 +232,6 @@ def q06_date_spine_fill(spark: SparkSession, sf_dir: str):
     "Monday=0 convention.",
 )
 def q07_avg_daily_by_dow(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .withColumn("dia", weekday_monday0("ts"))
@@ -265,7 +253,6 @@ def q07_avg_daily_by_dow(spark: SparkSession, sf_dir: str):
     "prefer approx_count_distinct; exact kept here for the oracle gate.",
 )
 def q08_distinct_days(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct(F.to_date("ts")).alias("n_dias"),
@@ -289,7 +276,6 @@ def q08_distinct_days(spark: SparkSession, sf_dir: str):
     "296-318).",
 )
 def q09_conditional_agg(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     v = F.col("value")
     high = F.when(v > 100, v)
@@ -314,7 +300,6 @@ def q09_conditional_agg(spark: SparkSession, sf_dir: str):
     "(app_indicadores_modelo_atencion.py:469-472).",
 )
 def q10_percent_of_total(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return percent_of_total(ev, ["event_type"], count_col="n", pct_col="pct")
 
@@ -341,7 +326,6 @@ def q10_percent_of_total(spark: SparkSession, sf_dir: str):
     "adversarial census pin).",
 )
 def q11_pivot_counts(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "dia", weekday_monday0("ts")
     )
@@ -376,7 +360,6 @@ def q11_pivot_counts(spark: SparkSession, sf_dir: str):
     "aggregated (≤ #brands) rows in exact decimal arithmetic.",
 )
 def q12_pareto_brands(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     joined = broadcast_dim_join(
@@ -404,7 +387,6 @@ def q12_pareto_brands(spark: SparkSession, sf_dir: str):
     "Deterministic tie-break on c_custkey.",
 )
 def q13_top_customers(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     g = (
@@ -432,7 +414,6 @@ def q13_top_customers(spark: SparkSession, sf_dir: str):
     "as ROW_NUMBER()=1. One shuffle on the key, linear in-partition pass.",
 )
 def q14_dedup_first(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "fecha", F.to_date("ts")
     )
@@ -465,7 +446,6 @@ def q14_dedup_first(spark: SparkSession, sf_dir: str):
     "threshold guards).",
 )
 def q15_lag_wait(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
@@ -511,7 +491,6 @@ def q15_lag_wait(spark: SparkSession, sf_dir: str):
     "decimal so the running total is order-safe.",
 )
 def q16_running_revenue(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     d = orders.groupBy(F.to_date("o_orderdate").alias("fecha")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("_dec")
@@ -544,7 +523,6 @@ def q16_running_revenue(spark: SparkSession, sf_dir: str):
     "full aggregation.",
 )
 def q17_rollup_total(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return with_total_row(
         orders,
@@ -580,7 +558,6 @@ def q17_rollup_total(spark: SparkSession, sf_dir: str):
     "results are identical by construction.",
 )
 def q18_set_ops(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("k"), F.lit(1).alias("_src")
     )
@@ -624,7 +601,6 @@ def q18_set_ops(spark: SparkSession, sf_dir: str):
     "part ids (app.py:77-87).",
 )
 def q19_balanced_partition(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     assign = balanced_partition(cust, "c_mktsegment", "c_custkey", 4, seed=42)
     return assign.groupBy(
@@ -643,7 +619,6 @@ def q19_balanced_partition(spark: SparkSession, sf_dir: str):
     "weekday-numbering watch-out).",
 )
 def q20_weekday_filter(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "dia", weekday_monday0("ts")
     )
@@ -663,7 +638,6 @@ def q20_weekday_filter(spark: SparkSession, sf_dir: str):
     "matches the reference's date−dayofweek arithmetic.",
 )
 def q21_weekly_revenue(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy(
         period_bucket("o_orderdate", "weekly").alias("semana")
@@ -691,7 +665,6 @@ def q21_weekly_revenue(spark: SparkSession, sf_dir: str):
     "correction variant is property-tested in tests/test_functions.py.",
 )
 def q22_excel_serial(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     serial = (F.lit(38000) + F.col("o_orderkey") % 3000).cast("double")
     return (
@@ -718,7 +691,6 @@ def q22_excel_serial(spark: SparkSession, sf_dir: str):
     "mis-bucket boundary rows.",
 )
 def q23_time_grid_5min(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     epoch = F.col("ts").cast("double")
     slot_ts = F.timestamp_seconds(
@@ -773,7 +745,6 @@ def q23_time_grid_5min(spark: SparkSession, sf_dir: str):
     "deterministically from c_custkey (the star schema has no phone column).",
 )
 def q24_phone_rules(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     digits = (F.col("c_custkey") * 7 % 100000000).cast("string")
     movil = (
@@ -823,7 +794,6 @@ def q24_phone_rules(spark: SparkSession, sf_dir: str):
     "try_to_timestamp; strings synthesized in 3 formats from o_orderdate.",
 )
 def q25_multiformat_dates(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     raw = (
         F.when(
@@ -867,7 +837,6 @@ def q25_multiformat_dates(spark: SparkSession, sf_dir: str):
     "identity.",
 )
 def q26_spanish_dates(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     d = orders.select(F.to_date("o_orderdate").alias("fecha")).distinct()
     e = d.withColumn("etiqueta", spanish_long_date(F.col("fecha")))
@@ -889,7 +858,6 @@ def q26_spanish_dates(spark: SparkSession, sf_dir: str):
     "row-wise sum of the family.",
 )
 def q27_wide_status_counts(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     n_open = F.count(F.when(F.col("l_linestatus") == "O", 1)).alias("n_open")
     n_fin = F.count(F.when(F.col("l_linestatus") == "F", 1)).alias("n_finished")
@@ -915,7 +883,6 @@ def q27_wide_status_counts(spark: SparkSession, sf_dir: str):
     "group window with deterministic tie-break on the lowest hour.",
 )
 def q28_peak_hour(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy(
         "event_type", F.hour("ts").cast("long").alias("hora")
@@ -977,7 +944,6 @@ def q29_classifiers(spark: SparkSession, sf_dir: str):
         contains_any,
     )
 
-    _utc(spark)
     part = load_table(spark, sf_dir, "part")
     base = part.filter(
         contains_any("p_type", ["BRASS", "STEEL", "COPPER"])
@@ -1044,7 +1010,6 @@ def q29_classifiers(spark: SparkSession, sf_dir: str):
 def q44_time_scalars(spark: SparkSession, sf_dir: str):
     from .functions.datetime_fns import ampm_to_decimal_hours, day_fraction_to_ampm
 
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     frac = (F.col("o_orderkey") % 1440).cast("double") / 1440.0
     labeled = orders.select(
@@ -1095,7 +1060,6 @@ def q44_time_scalars(spark: SparkSession, sf_dir: str):
 def q45_model_window_join(spark: SparkSession, sf_dir: str):
     import datetime as _dt
 
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     sedes = spark.createDataFrame(
         [
@@ -1158,7 +1122,6 @@ def q45_model_window_join(spark: SparkSession, sf_dir: str):
 def q46_constrained_partition(spark: SparkSession, sf_dir: str):
     from .operators.partitioner import constrained_partition
 
-    _utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     allowed = spark.createDataFrame(
         [
@@ -1209,7 +1172,6 @@ def q59_scalar_kit(spark: SparkSession, sf_dir: str):
         numeric_or_default,
     )
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -1257,7 +1219,9 @@ def q60_slot_spine_load(spark: SparkSession, sf_dir: str):
     from .operators.spines import hour_spine, time_slot_spine
     from .operators.windows import cumulative_sum
 
-    _utc(spark)
+    # reads no table, so no loader pins the TZ; the spine parses and
+    # formats timestamps in the session TZ
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     slots = union_all_by_name(
         [
             time_slot_spine(spark, "06:30", "12:00"),
@@ -1309,7 +1273,6 @@ def q60_slot_spine_load(spark: SparkSession, sf_dir: str):
 def q61_lag_carryforward(spark: SparkSession, sf_dir: str):
     from .operators.windows import lag_wait_minutes
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     b = ev.withColumn(
         "fin",
@@ -1341,7 +1304,6 @@ def q61_lag_carryforward(spark: SparkSession, sf_dir: str):
 def q63_salted_segments(spark: SparkSession, sf_dir: str):
     from .operators.joins import salted_join
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1372,7 +1334,6 @@ def q63_salted_segments(spark: SparkSession, sf_dir: str):
     "pivoted columns, no second aggregation.",
 )
 def q65_pivot_explicit_total(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     statuses = ["F", "O", "P"]
     piv = (
@@ -1453,7 +1414,6 @@ def q65_pivot_explicit_total(spark: SparkSession, sf_dir: str):
 def q66_wallclock_flexible(spark: SparkSession, sf_dir: str):
     from .functions.datetime_fns import parse_wallclock_flexible
 
-    _utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     two = lambda c: F.lpad(c.cast("string"), 2, "0")  # noqa: E731
@@ -1540,7 +1500,6 @@ def q66_wallclock_flexible(spark: SparkSession, sf_dir: str):
 def q81_asof_join(spark: SparkSession, sf_dir: str):
     from .operators.joins import asof_join
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     wdd = Window.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
     right = (

@@ -35,7 +35,6 @@ from .streaming.temporal import (
     "complete-mode output must equal exactly.",
 )
 def q40_streaming_hourly(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     agg = hourly_counts(events_stream(spark, sf_dir))
     return run_to_memory(agg, "q40_streaming_hourly_out", "complete")
 
@@ -60,7 +59,6 @@ def q40_streaming_hourly(spark: SparkSession, sf_dir: str):
     "both engines apply that guard here.",
 )
 def q43_streaming_dedup(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = events_stream(spark, sf_dir).filter(F.expr("unix_micros(ts) > 0"))
     deduped = dedup_first_stream(stream)
     out = run_to_memory(deduped, "q43_streaming_dedup_out", "append")
@@ -76,7 +74,6 @@ def q43_streaming_dedup(spark: SparkSession, sf_dir: str):
     "grid inference clamped ≥ 0.",
 )
 def q41_forecast_demand(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .ml.forecast import demand_features, forecast_grid, train_best_forecaster
     from .registry import load_table
 
@@ -111,7 +108,6 @@ def q41_forecast_demand(spark: SparkSession, sf_dir: str):
     "scan expression over the group key.",
 )
 def q104_demand_features(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .ml.forecast import demand_features
     from .registry import load_table
 
@@ -176,7 +172,6 @@ def _q151_oracle() -> str:
     "shuffle at any scale; the solve and grid are constant-size.",
 )
 def q151_lr_forecast_grid(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .ml.forecast import lr_forecast_closed_form
     from .registry import load_table
 
@@ -220,7 +215,6 @@ _SESSION_ORACLE = """
 def q56_sessionize(spark: SparkSession, sf_dir: str):
     from .registry import dsum, load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -249,7 +243,6 @@ def q56_sessionize(spark: SparkSession, sf_dir: str):
 def q69_streaming_sessionize(spark: SparkSession, sf_dir: str):
     from .streaming.temporal import sessionized_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return run_to_memory(
         sessionized_stream(events_stream(spark, sf_dir)),
         "q69_streaming_sessionize_out",
@@ -278,7 +271,6 @@ def q58_stateful_user_stats(spark: SparkSession, sf_dir: str):
         stateful_user_stats,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Python-boundary-bound stateful op: state partitions scale with the
     # source size (sf1: 8 -> 32 measured 11.1 s -> 5.3 s min-of-3; sf0.1
     # stays at 8 — see python_stateful_partitions)
@@ -316,7 +308,6 @@ def q58_stateful_user_stats(spark: SparkSession, sf_dir: str):
 def q90_stream_static_join(spark: SparkSession, sf_dir: str):
     from .streaming.temporal import stream_static_weighted
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     weights = spark.createDataFrame(
         [("click", 0.5), ("view", 1.0), ("purchase", 3.0),
          ("signup", 2.0), ("error", 1.5)],
@@ -346,7 +337,6 @@ def q90_stream_static_join(spark: SparkSession, sf_dir: str):
     "and bounds it — the tumbling/sliding/session trio is now covered.",
 )
 def q91_streaming_sliding(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .streaming.temporal import events_stream, run_to_memory
 
     agg = (
@@ -386,7 +376,6 @@ def q91_streaming_sliding(spark: SparkSession, sf_dir: str):
 def q95_stream_stream_join(spark: SparkSession, sf_dir: str):
     from .streaming.temporal import attribution_join
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     clicks = events_stream(spark, sf_dir).filter(
         F.col("event_type") == "click"
     )
@@ -428,7 +417,6 @@ def q95_stream_stream_join(spark: SparkSession, sf_dir: str):
 def q113_streaming_heavy_hitters(spark: SparkSession, sf_dir: str):
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = events_stream(spark, sf_dir)
     counts = (
         s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -529,33 +517,22 @@ def _q156_oracle() -> str:
     "Oracle: identical to q155 — mode-invariance is the claim.",
 )
 def q156_streaming_decontaminate(spark: SparkSession, sf_dir: str):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .llm.dedup import (
         BLOOM_K,
         BLOOM_M_BITS,
-        _spread,
-        bloom_bitmap_bits,
+        _bench_grams,
+        _rollup,
         bloom_probe_filter,
         shingles,
     )
     from .registry import load_table
-    from .session import materialize
     from .streaming.temporal import documents_stream, run_append_partials
 
     docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 37 == 0)
-    b = _spread(bench).select(
-        F.col("doc_id").alias("b_id"),
-        F.explode(shingles(F.col("text"), 3)).alias("g"),
+    b, bits = _bench_grams(
+        docs.filter(F.col("doc_id") % 37 == 0), "text", "doc_id", 3, 10,
+        (BLOOM_M_BITS, BLOOM_K),
     )
-    keep = (
-        b.groupBy("g")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= 10)
-        .select("g")
-    )
-    b = materialize(b.join(keep, "g"))
-    bits = bloom_bitmap_bits(b.select("g").distinct(), "g")
 
     stream = documents_stream(spark, sf_dir).filter(F.col("doc_id") % 37 != 0)
     # the file-source micro-batch arrives one-partition-per-file: spread
@@ -582,16 +559,7 @@ def q156_streaming_decontaminate(spark: SparkSession, sf_dir: str):
         )
 
     def _finalize(parts):
-        pair = (
-            parts.groupBy("doc_id", "b_id")
-            .agg(F.sum("n_part").alias("n_shared"))
-            .filter(F.col("n_shared") >= 2)
-        )
-        return pair.groupBy("doc_id").agg(
-            F.count("*").alias("n_bench_docs"),
-            F.sum("n_shared").alias("n_shared_shingles"),
-            F.max("n_shared").alias("max_shared"),
-        )
+        return _rollup(parts, 2, F.sum("n_part"))
 
     return run_append_partials(
         matched, "q156_streaming_decontaminate_out", _partial, _finalize
@@ -642,7 +610,6 @@ def _streaming_hll_oracle() -> str:
 def q161_streaming_hll(spark: SparkSession, sf_dir: str):
     from .llm.sketches import hll_estimate_exprs, hll_register_exprs
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     reg = hll_register_exprs("user_id", p=6, engine="spark")
     est = hll_estimate_exprs(p=6)
     s = events_stream(spark, sf_dir)
@@ -725,7 +692,6 @@ def q174_streaming_cms(spark: SparkSession, sf_dir: str):
     from .streaming.temporal import events_stream, run_to_memory
 
     D, W = 4, 256
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cells = cms_cell_exprs("user_id", D, W, "cms", "spark")
     stack_args = ", ".join(f"{j}, {c}" for j, c in enumerate(cells))
     s = events_stream(spark, sf_dir)

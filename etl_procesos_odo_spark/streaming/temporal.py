@@ -25,7 +25,9 @@ from ..session import materialize
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, with the same nanos→micros
-    timestamp normalization as the batch loader (session.load_table)."""
+    timestamp normalization and session-TZ pin as the batch loader
+    (session.load_table)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = f"{sf_dir}/events.parquet"
@@ -486,7 +488,8 @@ def attribution_join(
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table — the corpus-ingestion
     smoke path (production swaps in Kafka/autoloader with identical
-    downstream plans)."""
+    downstream plans). Pins the session TZ like session.load_table."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(path).schema
     return (

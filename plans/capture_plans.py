@@ -12,9 +12,6 @@ metrics the optimization guide (§1, §7.2) says to track — and a digest
 of the whole plan text with its session counters stripped (expression
 ids such as ``#12``, ``plan_id=34``), so two captures, even of different
 query subsets, can be diffed per query.
-
-Streaming-backed queries (plans built by executing a streaming job) can't
-be explained without running them; they are recorded as STREAMING-SKIP.
 """
 from __future__ import annotations
 

@@ -47,6 +47,8 @@ Usage:
                                       # for q154/q108/q134 (round 12)
     python scale_ladder.py --skew-tasks  # uniform-vs-skew sf1 straggler
                                       # task metrics (round 11)
+    python scale_ladder.py --extras   # skew-join and striped-rank
+                                      # evidence at $SPARK_GRAFT_SF_DIR
     python scale_ladder.py --gen-only
     python scale_ladder.py --run-sf /root/repo/.scaledata/sf1  # internal
 """
@@ -903,9 +905,149 @@ def _run_fixed_only(sf_dir: str) -> None:
     print(json.dumps({"n_docs": n, "fixed_bench": fixed}))
 
 
+def skew_join_bench(spark, sf_dir: str) -> dict[str, float]:
+    """Evidence for the salted-join scale claim (operators/joins.py): a
+    deliberately skewed big side (~95% of rows on one hot key, inflated
+    10×) equi-joined against a 1000-row dim with broadcast disabled (the
+    big-big scenario salting exists for). Three measurements:
+
+    - unsalted, AQE skew-split off  → the straggler worst case;
+    - unsalted, AQE skew-split on   → what the runtime rescues for free;
+    - salted (n_salt=32)            → the manual guard, hot key spread
+                                      across 32 reducers.
+
+    Reported under the "extras" key of SCALE_LADDER.json.
+    """
+    from pyspark.sql import functions as F
+
+    from etl_procesos_odo_spark.operators.joins import salted_join
+
+    li = (
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .select(
+            F.when(F.col("l_orderkey") % 20 != 0, F.lit(1).cast("long"))
+            .otherwise(F.pmod(F.col("l_orderkey"), F.lit(1000)))
+            .alias("k"),
+            F.col("l_orderkey").alias("rk"),
+            "l_quantity",
+        )
+        .withColumn("_i", F.explode(F.sequence(F.lit(1), F.lit(10))))
+    )
+    dim = spark.range(1000).select(
+        F.col("id").alias("dk"), (F.col("id") * 2).alias("payload")
+    )
+    saved = {
+        "spark.sql.autoBroadcastJoinThreshold":
+            spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+        "spark.sql.adaptive.skewJoin.enabled":
+            spark.conf.get("spark.sql.adaptive.skewJoin.enabled"),
+    }
+    res: dict[str, float] = {}
+
+    def run(tag: str, df) -> None:
+        t0 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        res[tag] = round(time.perf_counter() - t0, 3)
+
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        unsalted = li.join(dim, li["k"] == dim["dk"], "inner")
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+        run("skew_join_unsalted_noaqe_sec", unsalted)
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+        run("skew_join_unsalted_aqe_sec", unsalted)
+        run(
+            "skew_join_salted_sec",
+            salted_join(li, dim, "k", "dk", "rk", n_salt=32),
+        )
+    except Exception as exc:
+        print(f"BENCH ERROR skew_join: {exc}", file=sys.stderr)
+    finally:
+        for key, val in saved.items():
+            spark.conf.set(key, val)
+    return res
+
+
+def striped_rank_bench(spark) -> dict[str, float]:
+    """Evidence for the partitioner's striped-rank scale claim
+    (operators/partitioner.py:_striped_global_rank): the adversarial
+    one-giant-unit case — 10M distinct keys in a SINGLE unit, where a
+    plain ``row_number() over (partition by unit ...)`` funnels the whole
+    unit through one task (the 10^8-keys-per-unit straggler the striping
+    exists for), vs the striped form (4096 high-bit stripes, parallel
+    local ranks + broadcast prefix offsets). Best-of-2 warm each; the
+    results are bit-identical (property-tested), this measures only the
+    straggler."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from etl_procesos_odo_spark.operators.partitioner import (
+        _striped_global_rank,
+        seeded_order_hash,
+    )
+
+    keys = spark.range(10_000_000).select(
+        F.lit("u0").alias("unit"), F.col("id").alias("k")
+    )
+    striped = _striped_global_rank(
+        keys, "unit", "k", seeded_order_hash(F.col("k"), 42)
+    )
+    w = Window.partitionBy("unit").orderBy(
+        F.xxhash64(F.col("k").cast("string"), F.lit(42)), "k"
+    )
+    plain = keys.withColumn("_rk", F.row_number().over(w))
+    res: dict[str, float] = {}
+    try:
+        for tag, df in (("striped_rank_10m_one_unit_sec", striped),
+                        ("plain_window_rank_10m_one_unit_sec", plain)):
+            df.write.mode("overwrite").format("noop").save()  # warm
+            best = None
+            for _ in range(2):
+                t0 = time.perf_counter()
+                df.write.mode("overwrite").format("noop").save()
+                el = time.perf_counter() - t0
+                best = el if best is None else min(best, el)
+            res[tag] = round(best, 3)
+    except Exception as exc:
+        print(f"BENCH ERROR striped_rank: {exc}", file=sys.stderr)
+    return res
+
+
+def _run_extras(sf_dir: str) -> None:
+    """(internal, fresh JVM) The skew-join and striped-rank evidence
+    benches at one documents/lineitem scale point; print ONE JSON line."""
+    from etl_procesos_odo_spark.session import get_spark
+
+    spark = get_spark("scale-ladder")
+    out = skew_join_bench(spark, sf_dir)
+    out.update(striped_rank_bench(spark))
+    print(json.dumps(out))
+
+
 def main() -> None:
     if "--run-sf" in sys.argv:
         _run_one_sf(sys.argv[sys.argv.index("--run-sf") + 1])
+        return
+    if "--run-extras" in sys.argv:
+        _run_extras(sys.argv[sys.argv.index("--run-extras") + 1])
+        return
+    if "--extras" in sys.argv:
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--run-extras",
+             sf_dir],
+            capture_output=True, text=True, timeout=3600, cwd=REPO_ROOT,
+        )
+        if proc.returncode != 0:
+            print(proc.stderr[-2000:], file=sys.stderr)
+            raise SystemExit("extras segment failed")
+        ladder_path = os.path.join(REPO_ROOT, "SCALE_LADDER.json")
+        with open(ladder_path) as f:
+            results = json.load(f)
+        results["extras"] = json.loads(proc.stdout.strip().splitlines()[-1])
+        with open(ladder_path, "w") as f:
+            json.dump(results, f, indent=1)
+        print(json.dumps(results["extras"]))
         return
     if "--run-fixed" in sys.argv:
         _run_fixed_only(sys.argv[sys.argv.index("--run-fixed") + 1])

@@ -31,6 +31,30 @@ def test_shingles_short_text_guard(spark):
     assert got[1] == [] and got[2] == [] and got[3] == []
 
 
+
+def test_shingles_are_distinct_ngrams_all(spark):
+    """One gram builder under both: for every k, ``shingles`` equals
+    ``array_distinct(ngrams_all)`` and ``ngrams_all`` keeps repeats,
+    over empty, null, shorter-than-k, exactly-k and repeated texts."""
+    from etl_procesos_odo_spark.llm.dedup import ngrams_all
+
+    texts = ["", None, "a", "a b", "a b c", "a b c d", "x x x x x x",
+             "a b a b a b", "  a  b   c  "]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    for k in range(1, 5):
+        rows = df.select(
+            shingles("text", k).alias("s"),
+            F.array_distinct(ngrams_all("text", k)).alias("d"),
+            ngrams_all("text", k).alias("a"),
+        ).collect()
+        for t, r in zip(texts, rows):
+            words = (t or "").split()
+            grams = [" ".join(words[i:i + k])
+                     for i in range(len(words) - k + 1)]
+            assert r["s"] == r["d"], (k, t)
+            assert r["a"] == grams, (k, t)
+
+
 def test_exact_dedup_crafted(spark):
     df = spark.createDataFrame(
         [
@@ -485,8 +509,8 @@ def test_collapsed_lsh_bucket_blowup_guard(spark):
     sh = reps.select(
         "doc_id", shingles(F.col("text"), 3).alias("_sh")
     ).filter(F.size("_sh") > 0)
-    signed = sh.withColumn("_b", base_hashes(F.col("_sh"))).select(
-        "doc_id", *minhash_signature(F.col("_b"), 12)
+    signed = sh.withColumn("_b", base_hashes("_sh")).select(
+        "doc_id", *minhash_signature("_b", 12)
     )
     banded = lsh_bands(signed, "doc_id", 12, 4)
     per_bucket = banded.groupBy("band_idx", "band_hash").count().collect()
@@ -802,8 +826,8 @@ def test_incremental_dedup_hot_band_cap(spark):
     sh = D._spread(corpus).select(
         F.col("doc_id").alias("_id"), D.shingles(F.col("text"), 3).alias("_sh")
     ).filter(F.size("_sh") > 0)
-    signed = sh.withColumn("_base", D.base_hashes(F.col("_sh"))).select(
-        "_id", *D.minhash_signature(F.col("_base"), 12)
+    signed = sh.withColumn("_base", D.base_hashes("_sh")).select(
+        "_id", *D.minhash_signature("_base", 12)
     )
     banded = D.lsh_bands(signed, "_id", 12, 4)
     from pyspark.sql import Window
