@@ -1032,7 +1032,7 @@ def main() -> None:
         _run_extras(sys.argv[sys.argv.index("--run-extras") + 1])
         return
     if "--extras" in sys.argv:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", dict(LADDER)["sf0.1"])
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--run-extras",
              sf_dir],
