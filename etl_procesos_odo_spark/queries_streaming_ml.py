@@ -272,8 +272,8 @@ def q58_stateful_user_stats(spark: SparkSession, sf_dir: str):
     )
 
     # Python-boundary-bound stateful op: state partitions scale with the
-    # source size (sf1: 8 -> 32 measured 11.1 s -> 5.3 s min-of-3; sf0.1
-    # stays at 8 — see python_stateful_partitions)
+    # source size (sf1: 8 -> 32 measured 11.1 s -> 5.3 s min-of-3 — see
+    # python_stateful_partitions)
     out = run_to_memory(
         stateful_user_stats(events_stream(spark, sf_dir)),
         "q58_stateful_user_stats_out",

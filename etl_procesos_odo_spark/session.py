@@ -56,6 +56,20 @@ def _env_byte_size(name: str) -> str:
     return value
 
 
+def _env_cpus(name: str) -> str:
+    """Core-count env knob for ``local[N]``: unset, empty or ``*`` is
+    ``*`` (every core); otherwise a positive integer, kept as it is.
+    Anything else raises ``ValueError`` naming the variable — Spark would
+    get it as ``local[<value>]``."""
+    raw = os.environ.get(name, "")
+    value = raw.strip() or "*"
+    if value == "*":
+        return value
+    if not (value.isascii() and value.isdigit() and int(value) > 0):
+        raise ValueError(f"{name}={raw!r} is not a positive integer core count")
+    return value
+
+
 def get_spark(
     app_name: str = "etl-procesos-odo-spark",
     master: str | None = None,
@@ -68,16 +82,13 @@ def get_spark(
     oracle; Arrow is on for the Pandas-UDF slow paths; AQE handles runtime
     partition coalescing and skew-join splitting at scale.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = _env_cpus("SPARK_GRAFT_CPUS")
     prefer_smj = _env_flag("SPARK_GRAFT_PREFER_SMJ")  # raises on a typo
     shj_threshold = _env_byte_size("SPARK_GRAFT_SHJ_AQE_THRESHOLD")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 8)
-        except ValueError:
-            shuffle_partitions = 32
+        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 8)
 
     builder = (
         SparkSession.builder.appName(app_name)

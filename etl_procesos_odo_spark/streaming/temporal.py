@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize
-
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, with the same nanos→micros
@@ -77,40 +75,36 @@ def run_to_memory(
     state_partitions: int = 8,
 ) -> DataFrame:
     """Execute a streaming frame to completion against the memory sink and
-    return the result as a local batch DataFrame (bounded-input smoke path).
+    return the sink as a batch DataFrame (bounded-input smoke path).
 
-    Export path (r14, guide §5 — the driver should do no data work): a
-    BIG sink (> ``_DRIVER_EXPORT_MAX_BYTES``) is kept in the engine with
-    one eager ``session.materialize`` (a checkpoint); r13 and
-    earlier always ``collect()``-ed the sink to the Python driver and
-    rebuilt a DataFrame from local rows — a round-trip that WAS the
-    dominant cost of the big-output streaming queries (q69's 954,939
-    session rows at sf1: 28.8 s -> 10.3 s min-of-reps in the interleaved
-    family A/B, q43 14.8 -> 3.7, q40 5.2 -> 1.9;
-    plans/r14/ab_stream_export.py). SMALL sinks keep the driver-local
-    export: for a few thousand rows the collect+rebuild is cheaper than
-    the extra checkpoint job and keeps downstream consumers on local rows
-    (the same A/B measured blanket checkpointing +0.3 to +2.3 s on
-    q113/q131/q161/q174, all small-output). The path is picked from the
-    sink's size statistics, which cost no job. The temp view is gone
-    before returning, and the ContextCleaner frees the checkpoint with
-    the returned frame — a long correctness session still cannot
-    accumulate sink tables or streaming state across queries. Production
-    replaces this sink with Kafka/Delta — nothing upstream changes.
+    The export is the sink frame itself: its analysed plan keeps the
+    ``MemoryPlan``, which Spark plans as a ``LocalTableScan``, so reading
+    it runs no job and its rows stay on the driver for as long as the
+    frame lives, under any master — no checkpoint, no collect-and-rebuild
+    (the r13/r14 export forms and their measurements are in
+    OPTIMIZATION_r14.md). The temp view is dropped before returning, so a
+    long correctness session cannot accumulate sink views.
+
+    State partitions are ``min(spark.sql.shuffle.partitions, the
+    session's task slots (defaultParallelism), state_partitions)``: every
+    micro-batch opens and commits one state store per partition, so more
+    partitions than slots only adds commit waves. The conf is read at
+    ``.start()`` and restored after; production sizes it at deploy time
+    and replaces the memory sink with Kafka/Delta — nothing upstream
+    changes.
     """
     spark = df.sparkSession
-    # streaming state partition count should track KEY cardinality (hours,
-    # users, sessions — bounded here), not input width: every micro-batch
-    # pays state-store open/commit per partition, so 32 near-empty state
-    # partitions cost ~4x the wall time of 8 (measured; at sf1 the
-    # JVM-state-heavy operators still regress with more partitions —
-    # q69's session store 6.6 s at 8 vs 90.7 s at 32, commit-bound — so
-    # 8 stays the default and only the Python-boundary-bound stateful op
-    # scales it up via python_stateful_partitions). The conf is read
-    # at .start() and restored after; production sizes it at deploy time.
+    # state partitions should track KEY cardinality (hours, users,
+    # sessions — bounded here), not input width: at sf1 the
+    # JVM-state-heavy operators regress with more partitions (q69's
+    # session store 6.6 s at 8 vs 90.7 s at 32, commit-bound), so 8 stays
+    # the default and only the Python-boundary-bound stateful op scales
+    # it up via python_stateful_partitions
     saved = spark.conf.get("spark.sql.shuffle.partitions")
+    slots = spark.sparkContext.defaultParallelism
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(saved), state_partitions))
+        "spark.sql.shuffle.partitions",
+        str(min(int(saved), slots, state_partitions)),
     )
     try:
         q = (
@@ -126,34 +120,9 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
     sink = spark.table(name)
-    # drop the view first: the analyzed frame keeps the sink, and both
-    # exports below read only that frame
+    # the analysed frame keeps the sink, so it outlives its view
     spark.catalog.dropTempView(name)
-    try:
-        # MemoryPlan statistics are computed from the driver-held sink
-        # rows — reading them costs ~15 ms and NO job, where a count()
-        # cutover measured ~0.4 s on every small streaming query
-        sink_bytes = int(
-            sink._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # internals moved: fall back to an exact count job
-        # 20,000 rows ~ _DRIVER_EXPORT_MAX_BYTES at ~50 B/row, the
-        # narrow (key, count/timestamp) rows these sinks hold
-        sink_bytes = (
-            0 if sink.count() <= 20_000 else _DRIVER_EXPORT_MAX_BYTES + 1
-        )
-    if sink_bytes <= _DRIVER_EXPORT_MAX_BYTES:
-        return spark.createDataFrame(sink.collect(), sink.schema)
-    return materialize(sink, eager=True)
-
-
-# Export-path cutover (see run_to_memory): below this the driver-local
-# collect+rebuild wins (measured at sf1 — q58's 15k rows / ~600 KB are
-# fine either way, q113/q131/q161/q174's few-k outputs regress under a
-# blanket checkpoint), above it the JVM-side checkpoint wins (q69's
-# 954,939 sessions / ~48 MB: 24.0 -> 8.2 s fresh-JVM min-of-reps; q43
-# 12.7 -> 5.9 s).
-_DRIVER_EXPORT_MAX_BYTES = 1 << 20
+    return sink
 
 
 def python_stateful_partitions(
@@ -173,11 +142,14 @@ def python_stateful_partitions(
     86 MB state: 4.5 s at 8 partitions vs 8.2 s at 32; q69's session
     store 338 MB: 6.6 s vs 90.7 s), so they keep the low default.
 
-    The rule: one partition per ~512 KB of source bytes, floored at the
-    default 8 and capped at the session's parallelism — at bench sf0.1
-    (2 MB events) this stays 8 (identical plans to r13), at sf1 (17 MB)
-    it reaches the full 32, and on a cluster it tracks defaultParallelism
-    rather than any local constant.
+    The rule: one partition per ~512 KB of source bytes, floored at
+    run_to_memory's default 8, then capped at the session's parallelism
+    — so a ``local[4]`` session gets 4 at every scale, and a
+    ``local[32]`` one 8 at sf0.1 (2 MB events) and the full 32 at sf1
+    (17 MB); on a cluster it tracks defaultParallelism rather than any
+    local constant. The floor is measured: at sf0.01 (220 KB) the size
+    rule alone gives one partition, and q58 ran 1.06 s there against
+    0.87 s with 4 (in-JVM median of 9, ``local[4]``).
     """
     import glob as _glob
     import os as _os
@@ -192,7 +164,7 @@ def python_stateful_partitions(
     else:
         nbytes = _os.path.getsize(path) if _os.path.exists(path) else 0
     cores = spark.sparkContext.defaultParallelism
-    return max(8, min(cores, nbytes // (512 * 1024)))
+    return min(cores, max(8, nbytes // (512 * 1024)))
 
 
 def run_append_partials(
@@ -205,8 +177,8 @@ def run_append_partials(
     ``foreachBatch`` — the scalable form of :func:`run_to_memory` for
     high-volume stateless append streams.
 
-    ``run_to_memory`` materializes every raw sink row on the driver
-    (collect + createDataFrame), which is fine for the bounded-key
+    ``run_to_memory`` keeps every raw sink row on the driver (the
+    memory sink), which is fine for the bounded-key
     aggregates it serves but quadratic-unfriendly for raw match
     streams: q156's pair stream grows 96× from sf0.1 to sf1 (64,345 →
     6,181,482 rows) while its distinct-pair partials grow ~10×, and the

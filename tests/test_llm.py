@@ -475,13 +475,7 @@ def test_quantize_int8_range_and_zero_vector(spark):
 def test_collapsed_lsh_bucket_blowup_guard(spark):
     """A planted exact-dup cluster must contribute ONE row per band bucket
     (not n), no intra-cluster pairs, and pair weights must multiply back."""
-    from etl_procesos_odo_spark.llm.dedup import (
-        base_hashes,
-        lsh_bands,
-        minhash_lsh_pairs_collapsed,
-        minhash_signature,
-        shingles,
-    )
+    from etl_procesos_odo_spark.llm import dedup as D
     from pyspark.sql import functions as F
 
     words = [f"tok{i}" for i in range(40)]
@@ -494,25 +488,19 @@ def test_collapsed_lsh_bucket_blowup_guard(spark):
     rows.append((500, "entirely different content " * 6))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    out = minhash_lsh_pairs_collapsed(df, "text", "doc_id", threshold=0.5)
+    out = D.minhash_lsh_pairs_collapsed(df, "text", "doc_id", threshold=0.5)
     got = {(r["id_a"], r["id_b"]): r["n_pairs"] for r in out.collect()}
     # single near-dup pair between the two group representatives (0, 100),
     # weighted by 30 x 4 underlying document pairs
     assert got == {(0, 100): 120}
 
-    # the guard itself: band rows for the collapsed frame — one row per
-    # (band, representative), so the 30-copy cluster cannot hot-key a bucket
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    reps = df.groupBy(F.md5(norm).alias("d")).agg(
+    # the guard itself: the operator's band rows for the collapsed frame —
+    # one row per (band, representative), so the 30-copy cluster cannot
+    # hot-key a bucket
+    reps = df.groupBy(D._digest("text")).agg(
         F.min("doc_id").alias("doc_id"), F.min_by("text", "doc_id").alias("text")
     )
-    sh = reps.select(
-        "doc_id", shingles(F.col("text"), 3).alias("_sh")
-    ).filter(F.size("_sh") > 0)
-    signed = sh.withColumn("_b", base_hashes("_sh")).select(
-        "doc_id", *minhash_signature("_b", 12)
-    )
-    banded = lsh_bands(signed, "doc_id", 12, 4)
+    banded = D._band_rows(D._shingle_frame(reps, "text", "doc_id", 3), 12, 4)
     per_bucket = banded.groupBy("band_idx", "band_hash").count().collect()
     assert max(r["count"] for r in per_bucket) <= 2  # reps only, never 30
 
@@ -821,23 +809,10 @@ def test_incremental_dedup_hot_band_cap(spark):
     assert out[10] == ("near_dup", 100)
     assert out[11] == ("near_dup", 2)
 
-    # the capped corpus band frame itself is bounded: rebuild the banding
-    # exactly as the operator does and assert no bucket exceeds the cap
-    sh = D._spread(corpus).select(
-        F.col("doc_id").alias("_id"), D.shingles(F.col("text"), 3).alias("_sh")
-    ).filter(F.size("_sh") > 0)
-    signed = sh.withColumn("_base", D.base_hashes("_sh")).select(
-        "_id", *D.minhash_signature("_base", 12)
-    )
-    banded = D.lsh_bands(signed, "_id", 12, 4)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_idx", "band_hash").orderBy("_id")
-    capped = (
-        banded.withColumn("_bk", F.row_number().over(w))
-        .filter(F.col("_bk") <= 8)
-        .drop("_bk")
-    )
+    # the capped corpus band frame itself is bounded: the operator's own
+    # corpus banding and cap, and no bucket exceeds the cap
+    banded = D._band_rows(D._shingle_frame(corpus, "text", "doc_id", 3), 12, 4)
+    capped = D.band_min_k(banded, 8)
     sizes = capped.groupBy("band_idx", "band_hash").count()
     assert sizes.agg(F.max("count")).collect()[0][0] <= 8
     # and the uncapped frame really was hot (sanity that the test bites)
